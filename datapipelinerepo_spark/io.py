@@ -182,23 +182,6 @@ class BaseVersionConflict(RuntimeError):
     and Spark's replay re-runs it to convergence."""
 
 
-def lakehouse_format() -> str | None:
-    """'delta' when delta-spark is importable AND the active session
-    carries the Delta SQL extension (a pip-installed delta-spark with an
-    unconfigured session would make every delta write crash — the gate
-    checks both halves), else None → plain parquet. Iceberg would slot
-    in the same way. The engine degrades gracefully in environments
-    without lakehouse jars (like this sandbox) while the MERGE path
-    stays real code."""
-    import importlib.util
-
-    if importlib.util.find_spec("delta") is None:
-        return None
-    spark = SparkSession.getActiveSession()
-    exts = spark.conf.get("spark.sql.extensions", "") if spark else ""
-    return "delta" if exts and "DeltaSparkSessionExtension" in exts else None
-
-
 # Session-scoped PLAN memo for load_table (r14 optimization): every
 # load_table call paid a fresh file listing + footer schema inference
 # (~0.1 s of driver-side py4j work per call — a multi-table query
@@ -3921,14 +3904,7 @@ class TableStore:
         watermarks — the maintenance/streaming consumers), and
         ``bloom_index_cols`` (columns with a built per-file bloom
         index). Per-bucket file-count skew is in ``files_per_bucket``
-        (max/min/avg) — the auto-compaction signal.
-
-        Delta-backed tables (the env-gated MERGE path) report
-        ``format: delta`` with ``version: None`` — their version
-        history lives in the Delta log, not the store's manifests —
-        and file counts EXCLUDE the _delta_log but may include
-        tombstoned data files the log removed but VACUUM hasn't
-        reclaimed (exact snapshot accounting needs the log reader)."""
+        (max/min/avg) — the auto-compaction signal."""
         if not self.exists(name):
             raise ValueError(f"{name}: no such table")
         out: dict = {"name": name, "format": "parquet"}
@@ -3968,8 +3944,6 @@ class TableStore:
             # overwrite-reset/heal window — report what exists
             # instead of crashing on max([]) (code-review r12)
             out.update({"version": None, "n_versions": 0})
-            if self._is_delta(name):
-                out["format"] = "delta"
             # unversioned tables carry their S4 mod-time in meta, not
             # manifests — surface it so describe_detail is the one
             # catalog verb pipeline gates need (VERDICT r12 item 7).
@@ -3986,8 +3960,6 @@ class TableStore:
             files = []
             base_dir = self._dir(name)
             for dirpath, dirnames, fnames in os.walk(base_dir):
-                if "_delta_log" in dirpath:
-                    continue  # log checkpoints are not data files
                 # hidden dirs (.bloomidx sidecars, crashed .tmp-/.old-
                 # swaps) hold bitmap parquet, not data — a versioned
                 # table healing through this window must not count
@@ -4535,8 +4507,6 @@ class TableStore:
     )
 
     def _colmap_op_guard(self, name: str, col: str) -> tuple[int, dict]:
-        if self._is_delta(name):
-            raise ValueError(f"{name}: use Delta's own column mapping")
         if not self.is_versioned(name) or self.keyed_spec(name) is None:
             raise ValueError(
                 f"{name}: rename/drop_column need a versioned keyed "
@@ -4745,15 +4715,6 @@ class TableStore:
             .parquet(*[os.path.join(base, f) for f in files])
         )
 
-    def _is_delta(self, name: str) -> bool:
-        """A table previously written by the Delta MERGE path carries a
-        _delta_log. EVERY read and write routes on this per-table marker:
-        a plain-parquet write into a Delta directory would add files the
-        Delta log doesn't know about (silently invisible to reads), and
-        treating a parquet table as Delta crashes — mixed-backend stores
-        are legal, mixed-backend tables are not."""
-        return os.path.isdir(os.path.join(self._dir(name), "_delta_log"))
-
     # -- reads -------------------------------------------------------------
     def read(
         self,
@@ -4785,17 +4746,6 @@ class TableStore:
         tables only — everything else should filter an ordinary read."""
         if version is not None and as_of_ts is not None:
             raise ValueError("pass version= or as_of_ts=, not both")
-        if self._is_delta(name):
-            if version is not None or as_of_ts is not None:
-                raise ValueError(
-                    "version=/as_of_ts= are only for versioned keyed tables"
-                )
-            if where is not None:
-                raise ValueError(
-                    "where= planning is for this store's versioned "
-                    "tables; filter the Delta read directly"
-                )
-            return self.spark.read.format("delta").load(self._dir(name))
         if as_of_ts is not None:
             version = self.version_as_of(name, as_of_ts)
         if where is not None and not self.is_versioned(name):
@@ -4889,55 +4839,44 @@ class TableStore:
     # -- writes ------------------------------------------------------------
     def append(self, df: DataFrame, name: str) -> None:
         """S8: WRITE_APPEND + ALLOW_FIELD_ADDITION → parquet append; new
-        columns surface on read via mergeSchema=true. Appends to a
-        Delta-backed table go through the Delta writer (a raw parquet
-        append would be invisible to the Delta log — silent data loss)."""
+        columns surface on read via mergeSchema=true."""
         df = self._enforce_constraints(name, df)
-        if self._is_delta(name):
-            (
-                df.write.format("delta")
-                .mode("append")
-                .option("mergeSchema", "true")
-                .save(self._dir(name))
-            )
-        else:
-            spec = self.keyed_spec(name)
-            if spec is not None:
-                # stamp appended rows into their buckets — an unstamped
-                # root write is invisible to the partition-discovery
-                # read (code-review r5: reproduced silent data loss)
-                keys, n = spec
-                df = self._to_physical(df, self._colmap_doc(name))
-                df = df.withColumn("_kb", self._kb_expr(name, keys, n))
-                if self.is_versioned(name):
-                    base_v, base_ident = self._pin_base(name)
+        spec = self.keyed_spec(name)
+        if spec is not None:
+            # stamp appended rows into their buckets — an unstamped
+            # root write is invisible to the partition-discovery
+            # read (code-review r5: reproduced silent data loss)
+            keys, n = spec
+            df = self._to_physical(df, self._colmap_doc(name))
+            df = df.withColumn("_kb", self._kb_expr(name, keys, n))
+            if self.is_versioned(name):
+                base_v, base_ident = self._pin_base(name)
 
-                    def _rederive():
-                        # appends never remove files: against whatever
-                        # version a concurrent writer just published,
-                        # 'kept' is simply ALL of its files — no
-                        # re-merge, the staged rows are base-independent
-                        nv, nident = self._pin_base(name)
-                        return self._manifest_files(name, nv), nv, nident
+                def _rederive():
+                    # appends never remove files: against whatever
+                    # version a concurrent writer just published,
+                    # 'kept' is simply ALL of its files — no
+                    # re-merge, the staged rows are base-independent
+                    nv, nident = self._pin_base(name)
+                    return self._manifest_files(name, nv), nv, nident
 
-                    self._append_and_publish(
-                        df, name, None, self._manifest_files(name, base_v),
-                        op="append", version_expect=base_v,
-                        version_expect_ident=base_ident,
-                        rederive_kept=_rederive,
-                    )
-                    return
-                self._cluster_kb(df, n).write.mode("append").partitionBy(
-                    "_kb"
-                ).parquet(self._dir(name))
-                # evolving appends widen the stored schema the
-                # emptied-table fallback serves (code-review r7)
-                self._touch_meta(
-                    name, schema=self._widened_schema_json(name, df.schema)
+                self._append_and_publish(
+                    df, name, None, self._manifest_files(name, base_v),
+                    op="append", version_expect=base_v,
+                    version_expect_ident=base_ident,
+                    rederive_kept=_rederive,
                 )
                 return
-            else:
-                df.write.mode("append").parquet(self._dir(name))
+            self._cluster_kb(df, n).write.mode("append").partitionBy(
+                "_kb"
+            ).parquet(self._dir(name))
+            # evolving appends widen the stored schema the
+            # emptied-table fallback serves (code-review r7)
+            self._touch_meta(
+                name, schema=self._widened_schema_json(name, df.schema)
+            )
+            return
+        df.write.mode("append").parquet(self._dir(name))
         self._touch_meta(name)
 
     def overwrite(self, df: DataFrame, name: str) -> None:
@@ -4956,16 +4895,8 @@ class TableStore:
         Validating those would re-judge rows written before a
         constraint existed, wedging the table (code-review r7 wave 2);
         the public verbs validate their INCOMING batches instead."""
-        if self._is_delta(name):
-            (
-                df.write.format("delta")
-                .mode("overwrite")
-                .option("overwriteSchema", "true")
-                .save(self._dir(name))
-            )
-        else:
-            self._retire_versioned(name)
-            df.write.mode("overwrite").parquet(self._dir(name))
+        self._retire_versioned(name)
+        df.write.mode("overwrite").parquet(self._dir(name))
         self._clear_keyed(name)
         self._touch_meta(name)
 
@@ -4974,18 +4905,14 @@ class TableStore:
         date slice then appends (datasources.py:50-59); here dynamic
         partition overwrite replaces exactly the partitions present in
         ``df`` and leaves all others intact — exactly-once under re-run.
-        (Delta honors the same dynamic partitionOverwriteMode option.)
         """
         df = self._enforce_constraints(name, df)
-        w = (
+        (
             df.write.mode("overwrite")
             .partitionBy(part_col)
             .option("partitionOverwriteMode", "dynamic")
+            .parquet(self._dir(name))
         )
-        if self._is_delta(name):
-            w.format("delta").save(self._dir(name))
-        else:
-            w.parquet(self._dir(name))
         # Stamp the catalog only if the table actually holds data: a
         # dynamic partitioned write of an EMPTY frame writes no files
         # (no partition receives data), and stamping it would create a
@@ -4995,7 +4922,7 @@ class TableStore:
         # into a permanent replay-crash loop (code-review r6). An empty
         # re-load of an EXISTING table still stamps (it is a completed,
         # if trivial, load).
-        if self._dir_has_parquet(name) or self._is_delta(name):
+        if self._dir_has_parquet(name):
             self._touch_meta(name)
 
     def upsert(self, df: DataFrame, name: str, key: str | list[str]) -> None:
@@ -5004,27 +4931,16 @@ class TableStore:
         generalization of the reference's delete-then-append (S10) from
         a date slice to arbitrary keys.
 
-        Backend routing: when a lakehouse format is on the classpath
-        (Delta — see ``lakehouse_format()``), this issues a real
-        ``MERGE`` that rewrites only the files containing matched keys;
-        on plain parquet it falls back to anti-join + union + overwrite,
-        which rewrites the whole table — semantically identical,
-        operationally fine for dimension-sized tables, and the
-        documented reason a 100 TB deployment should sit on a lakehouse
-        format. The incoming batch is deduplicated on the key
-        (last-writer-wins within a batch is not defined — dropDuplicates
-        keeps one) before merging, in both backends."""
+        Plain parquet is the only backend. A keyed table whose bucket
+        keys match ``key`` merges per bucket (only buckets holding
+        incoming keys rewrite — see _upsert_keyed); any other table
+        merges by anti-join + union + overwrite, which rewrites the
+        whole table — fine for dimension-sized tables. The incoming
+        batch is deduplicated on the key (last-writer-wins within a
+        batch is not defined — dropDuplicates keeps one) before
+        merging."""
         keys = [key] if isinstance(key, str) else list(key)
         incoming = self._enforce_constraints(name, df).dropDuplicates(keys)
-        # MERGE only on tables that ARE Delta (or don't exist yet, so
-        # this call creates them as Delta); a table previously written
-        # as plain parquet keeps the fallback — DeltaTable.forPath on a
-        # parquet directory would crash
-        if lakehouse_format() == "delta" and (
-            not self.exists(name) or self._is_delta(name)
-        ):
-            self._upsert_delta(incoming, name, keys)
-            return
         spec = self.keyed_spec(name) if self.exists(name) else None
         if spec is not None and list(spec[0]) == keys:
             self._upsert_keyed(incoming, name, keys, spec[1])
@@ -5649,8 +5565,7 @@ class TableStore:
         create-vs-merge on exists() broke contract-first creation
         (code-review r7 wave 2: declare constraints, then upsert)."""
         return (
-            self._is_delta(name)
-            or self._dir_has_parquet(name)
+            self._dir_has_parquet(name)
             or bool(self.versions(name))
             or self.keyed_spec(name) is not None
         )
@@ -6650,28 +6565,6 @@ class TableStore:
             return sorted(affected)
 
         return self._retry_base_conflicts(_attempt)
-
-    def _upsert_delta(self, incoming: DataFrame, name: str, keys: list[str]) -> None:
-        """Real MERGE INTO on a Delta table: only files containing
-        matched keys rewrite (plus the appended inserts) — the 100 TB
-        path the parquet fallback stands in for. Null-safe key equality
-        (<=>) mirrors the fallback's eqNullSafe."""
-        from delta.tables import DeltaTable  # gated by lakehouse_format()
-
-        path = self._dir(name)
-        if not self.exists(name):
-            incoming.write.format("delta").mode("overwrite").save(path)
-        else:
-            cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-            (
-                DeltaTable.forPath(self.spark, path)
-                .alias("t")
-                .merge(incoming.alias("s"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-        self._touch_meta(name)
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._dir(name), ignore_errors=True)

@@ -3901,11 +3901,11 @@ def _padded_rule_list(word_counts: dict[str, int], n_rules: int) -> list:
 @register("text_bpe_encode_1k", bench=True, driver=False)
 def text_bpe_encode_1k(spark, sf_dir):
     """PRODUCTION-SIZE BPE encode (VERDICT r6 item 1): tokenize the
-    full corpus through bpe_encode's Arrow engine with a 1024-rule
-    list — the regime where the chained-fold engine's expression tree
-    blows up (≈90 s to compile 1k folds, hours at 30k) and the
-    priority-merge Arrow path keeps per-word cost independent of
-    rule-list size. Rules are learned at run time from a BOUNDED
+    full corpus through bpe_encode's pandas UDF with a 1024-rule
+    list — the regime where chained per-rule column folds would blow
+    up the expression tree (≈90 s to compile 1k folds, hours at 30k)
+    and priority merging keeps per-word cost independent of rule-list
+    size. Rules are learned at run time from a BOUNDED
     corpus sample (doc_id < 4096 → word counts → py_bpe_learn, the
     standard train-tokenizer-on-a-sample workflow; the collect is the
     sample's vocabulary, a bounded artifact) and padded to 1024 with a
@@ -3913,8 +3913,8 @@ def text_bpe_encode_1k(spark, sf_dir):
     31-word vocabulary only supports ~89 real merges). Rows-only on
     the driver surface by design: an oracle would have to replay rule
     LEARNING in SQL; correctness of the engine itself is pinned by the
-    8-rule text_bpe_encode oracle plus the fold/arrow/python parity
-    pytests (test_ext_ops, incl. literal fold-vs-arrow at 1024 rules)."""
+    8-rule text_bpe_encode oracle plus the parity pytests against the
+    pure-Python sequential replay (test_ext_ops, incl. 1024 rules)."""
     docs = t(spark, sf_dir, "documents")
     sample = docs.filter(F.col("doc_id") < 4096)
     wc = {
@@ -3927,7 +3927,7 @@ def text_bpe_encode_1k(spark, sf_dir):
         .collect()
     }
     rules = _padded_rule_list(wc, 1024)
-    return T.bpe_encode(docs, rules, engine="arrow")
+    return T.bpe_encode(docs, rules)
 
 
 # fixed rank-ordered merge list for the encode query: decoupled from
@@ -3993,7 +3993,8 @@ def text_bpe_encode(spark, sf_dir):
     """BPE ENCODE (text.bpe_encode): tokenize the corpus with a fixed
     rank-ordered merge list — the apply half of the tokenizer whose
     train half is text_bpe_learn, sharing the identical greedy
-    left-to-right fold (_bpe_fold). Merges apply to DISTINCT words
+    left-to-right merge pass (_bpe_fold there, its Python twin
+    _bpe_merge_pass_py here). Merges apply to DISTINCT words
     (the word-cache pattern; vocabulary frame, not corpus) and per-word
     token counts join back to word instances. The oracle replays the 8
     rule applications as a recursive CTE using the trainer oracle's

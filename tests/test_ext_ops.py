@@ -1783,6 +1783,39 @@ def _word_counts(texts):
     return dict(words)
 
 
+def _py_bpe_tokens(text, rules):
+    """The definitional encode: ws_tokens words, each rule applied as
+    one sequential greedy pass (_bpe_merge_pass_py) in rank order, the
+    words' tokens concatenated in document order."""
+    import re
+
+    from datapipelinerepo_spark.operators.text import _bpe_merge_pass_py
+
+    out = []
+    for w in re.sub(r"\s+", " ", (text or "").lower()).split(" "):
+        if not w:
+            continue
+        t = list(w)
+        for left, right in rules:
+            if len(t) < 2:
+                break
+            t = _bpe_merge_pass_py(t, left, right)
+        out.append(t)
+    return out
+
+
+def _py_bpe_counts(text, rules):
+    """(n_words, n_chars, n_bpe_tokens) of _py_bpe_tokens — the
+    integer columns of bpe_encode's output row."""
+    words = _py_bpe_tokens(text, rules)
+    return (
+        len(words),
+        sum(len("".join(t)) for t in words),
+        sum(len(t) for t in words),
+    )
+
+
+
 def test_py_bpe_learn_matches_spark_trainer(spark, docs):
     """The incremental driver-side trainer (py_bpe_learn — the
     production-size rule-list generator) learns the IDENTICAL sequence
@@ -1804,42 +1837,36 @@ def test_py_bpe_learn_matches_spark_trainer(spark, docs):
     assert got == py_bpe_learn(wc, 8)
 
 
-def test_bpe_encode_arrow_equals_fold_on_learned_rules(spark, docs):
+def test_bpe_encode_arrow_equals_sequential_on_learned_rules(spark, docs):
     """VERDICT r6 item 1 parity chain, Spark-side link: the Arrow
-    engine (priority merging — the 30k-rule-tractable path) produces
-    byte-identical output to the chained-fold engine on a 48-rule
-    LEARNED list over real corpus text."""
+    encoder (priority merging — the 30k-rule-tractable path) produces
+    the per-document counts of the definitional sequential per-rule
+    replay on a 48-rule LEARNED list over real corpus text."""
     from datapipelinerepo_spark.operators import text as T2
 
     sl = docs.filter(F.col("doc_id") < 200).select("doc_id", "text")
-    wc = _word_counts([r["text"] for r in sl.collect()])
+    texts = {r["doc_id"]: r["text"] for r in sl.collect()}
+    wc = _word_counts(texts.values())
     rules = [(l, r) for _, l, r, _, _ in T2.py_bpe_learn(wc, 48)]
     assert len(rules) == 48 and T2.bpe_rules_sequential_safe(rules)
-    fold = {
-        tuple(r)
-        for r in T2.bpe_encode(sl, rules, engine="fold").collect()
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
+        for r in T2.bpe_encode(sl, rules).collect()
     }
-    arrow = {
-        tuple(r)
-        for r in T2.bpe_encode(sl, rules, engine="arrow").collect()
-    }
-    assert fold == arrow
+    exp = {d: _py_bpe_counts(t, rules) for d, t in texts.items()}
+    assert got == {d: c for d, c in exp.items() if c[0]}
 
 
 @pytest.mark.slow
-def test_bpe_encode_arrow_equals_fold_on_1k_rules(spark):
-    """VERDICT r6 item 1 parity chain, production-size link: literal
-    fold-vs-Arrow equality on a 1024-rule LEARNED list. The driver
-    testdata's documents table has a 31-word vocabulary (only ~89
-    learnable merges), so the list is learned from a SEEDED synthetic
-    corpus rich enough to support 1k merges. The fold engine at this
-    depth is exactly the expression-tree blowup the Arrow path exists
-    to avoid (≈90 s to compile+run here, hours at 30k) — it still
-    runs, which is what makes this direct cross-check possible. Also
-    pins the per-doc counts against the definitional pure-Python
-    sequential fold."""
+def test_bpe_encode_arrow_equals_sequential_on_1k_rules(spark):
+    """VERDICT r6 item 1 parity chain, production-size link: the Arrow
+    encoder equals the definitional pure-Python sequential replay on a
+    1024-rule LEARNED list — the depth where chained per-rule column
+    folds blow up the expression tree. The driver testdata's documents
+    table has a 31-word vocabulary (only ~89 learnable merges), so the
+    list is learned from a SEEDED synthetic corpus rich enough to
+    support 1k merges."""
     import random
-    import re
 
     from datapipelinerepo_spark.operators import text as T2
 
@@ -1860,30 +1887,9 @@ def test_bpe_encode_arrow_equals_fold_on_1k_rules(spark):
 
     arrow = {
         r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
-        for r in T2.bpe_encode(df, rules, engine="arrow").collect()
+        for r in T2.bpe_encode(df, rules).collect()
     }
-    fold = {
-        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
-        for r in T2.bpe_encode(df, rules, engine="fold").collect()
-    }
-    assert arrow == fold
-
-    def py_doc(text):
-        n_words = n_chars = n_bpe = 0
-        for w in re.sub(r"\s+", " ", text.lower()).split(" "):
-            if not w:
-                continue
-            t = list(w)
-            for left, right in rules:  # definitional sequential passes
-                if len(t) < 2:
-                    break
-                t = T2._bpe_merge_pass_py(t, left, right)
-            n_words += 1
-            n_chars += len(w)
-            n_bpe += len(t)
-        return n_words, n_chars, n_bpe
-
-    assert arrow == {d: py_doc(t) for d, t in rows}
+    assert arrow == {d: _py_bpe_counts(t, rules) for d, t in rows}
 
 
 def _py_bpe_learn_batched(word_counts, n_merges, batch, m_factor=4):
@@ -1973,31 +1979,33 @@ def test_bpe_learn_batched_driver_replay_matches_distributed(
     assert distributed == driver == over_cap
 
 
-def test_bpe_encode_tokens_arrow_equals_fold(spark, docs):
-    """bpe_encode_tokens' Arrow engine (code-review r7: the sequence
-    form needs the production-size path too) returns byte-identical
-    token sequences to the fold engine on a learned list over real
-    corpus text."""
+def test_bpe_encode_tokens_arrow_equals_sequential(spark, docs):
+    """bpe_encode_tokens' Arrow encoder (code-review r7: the sequence
+    form needs the production-size path too) returns exactly the token
+    sequences of the sequential per-rule replay on a learned list over
+    real corpus text."""
     from datapipelinerepo_spark.operators import text as T2
 
     sl = docs.filter(F.col("doc_id") < 150).select("doc_id", "text")
-    wc = _word_counts([r["text"] for r in sl.collect()])
+    texts = {r["doc_id"]: r["text"] for r in sl.collect()}
+    wc = _word_counts(texts.values())
     rules = [(l, r) for _, l, r, _, _ in T2.py_bpe_learn(wc, 40)]
-    fold = {
+    got = {
         r["doc_id"]: list(r["tokens"])
-        for r in T2.bpe_encode_tokens(sl, rules, engine="fold").collect()
+        for r in T2.bpe_encode_tokens(sl, rules).collect()
     }
-    arrow = {
-        r["doc_id"]: list(r["tokens"])
-        for r in T2.bpe_encode_tokens(sl, rules, engine="arrow").collect()
+    exp = {
+        d: [tok for word in _py_bpe_tokens(t, rules) for tok in word]
+        for d, t in texts.items()
     }
-    assert fold == arrow and len(fold) == 150
+    assert got == exp and len(got) == 150
 
 
 def test_bpe_encode_arrow_fallback_on_unsafe_rules(spark):
     """A rule list the equivalence gate rejects (here: a component that
-    no earlier rule produces) routes the Arrow engine onto the literal
-    sequential passes — still byte-identical to the fold engine."""
+    no earlier rule produces) routes the Arrow encoder onto the literal
+    sequential passes — both the count and the token-sequence form
+    still equal the pure-Python sequential replay."""
     from datapipelinerepo_spark.operators import text as T2
 
     # ("ab","c") before ("a","b"): ill-formed — "ab" exists as a token
@@ -2005,12 +2013,21 @@ def test_bpe_encode_arrow_fallback_on_unsafe_rules(spark):
     # differently than the sequential fold
     rules = [("ab", "c"), ("a", "b")]
     assert not T2.bpe_rules_sequential_safe(rules)
-    df = spark.createDataFrame(
-        [(1, "abc abd ab"), (2, "cab abcabc")], "doc_id long, text string"
-    )
-    fold = {tuple(r) for r in T2.bpe_encode(df, rules, engine="fold").collect()}
-    arrow = {tuple(r) for r in T2.bpe_encode(df, rules, engine="arrow").collect()}
-    assert fold == arrow
+    rows = [(1, "abc abd ab"), (2, "cab abcabc")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_bpe_tokens"])
+        for r in T2.bpe_encode(df, rules).collect()
+    }
+    assert got == {d: _py_bpe_counts(t, rules) for d, t in rows}
+    toks = {
+        r["doc_id"]: list(r["tokens"])
+        for r in T2.bpe_encode_tokens(df, rules).collect()
+    }
+    assert toks == {
+        d: [tok for word in _py_bpe_tokens(t, rules) for tok in word]
+        for d, t in rows
+    }
 
 
 def test_global_desc_rank_cumsum_tiny_and_empty(spark):

@@ -95,27 +95,6 @@ def test_upsert_null_keys_replace_not_accumulate(spark, tmp_path):
     assert store.read("t").count() == 2
 
 
-def test_upsert_delta_backend_when_available(spark, tmp_path):
-    """The MERGE INTO path runs when a lakehouse format is on the
-    classpath; in environments without delta-spark (this sandbox) the
-    parquet fallback above is the tested behavior and this case skips.
-    Both backends satisfy the same upsert contract, so the assertions
-    are identical to test_upsert_replaces_by_key."""
-    import pytest
-
-    from datapipelinerepo_spark.io import lakehouse_format
-
-    if lakehouse_format() != "delta":
-        pytest.skip("delta-spark not installed; parquet fallback covered above")
-    store = TableStore(spark, str(tmp_path))
-    base = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])
-    store.upsert(base, "t", "id")
-    assert (tmp_path / "t" / "_delta_log").is_dir()  # really went through Delta
-    store.upsert(spark.createDataFrame([(2, "B2"), (3, "c")], ["id", "val"]), "t", "id")
-    got = {r["id"]: r["val"] for r in store.read("t").collect()}
-    assert got == {1: "a", 2: "B2", 3: "c"}
-
-
 def test_rollup_incremental_equals_recompute(spark, sf_dir, tmp_path):
     """Continuous-aggregate contract: maintaining the rollup over delta
     batches produces exactly the full-recompute table, regardless of
@@ -3949,9 +3928,8 @@ def test_tables_and_describe_detail(spark, tmp_path):
 
 def test_describe_detail_edge_states(spark, tmp_path):
     """code-review r12 hardening: describe_detail must report (not
-    crash) through the overwrite-reset heal window, must not count
-    _delta_log checkpoints as data, and must not list a crashed
-    build's .tmp-* sidecar leftovers as indexed columns."""
+    crash) through the overwrite-reset heal window, and must not list
+    a crashed build's .tmp-* sidecar leftovers as indexed columns."""
     import os
 
     from datapipelinerepo_spark.io import TableStore
@@ -3977,20 +3955,6 @@ def test_describe_detail_edge_states(spark, tmp_path):
     d2 = store.describe_detail("kv")
     assert d2["version"] is None and d2["n_versions"] == 0
     assert d2["n_files"] > 0  # the data files still report
-
-    # delta-marked dir: format flips, log checkpoints excluded
-    store.overwrite(spark.range(5).toDF("x"), "dl")
-    log = os.path.join(str(tmp_path), "dl", "_delta_log")
-    os.makedirs(log)
-    spark.range(3).toDF("y").coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(log, "0.checkpoint.parquet")
-    )
-    d3 = store.describe_detail("dl")
-    assert d3["format"] == "delta"
-    # only the table's own parquet counts, not the checkpoint
-    plain = TableStore(spark, str(tmp_path / "p2"))
-    plain.overwrite(spark.range(5).toDF("x"), "dl2")
-    assert d3["n_files"] == plain.describe_detail("dl2")["n_files"]
 
 
 # --- r13 continuation: stats-answered scalar aggregates ---------------
