@@ -253,9 +253,9 @@ def main() -> None:
     # versioned-store lifecycle (VERDICT r6 item 4): overwrite → 3
     # bucket-pruned upserts → snapshot read → time-travel read →
     # compact → vacuum, on a fresh store per run — the full
-    # snapshot-table maintenance cycle, which store_keyed_merge (the
-    # unversioned MERGE path) does not cover. Timing includes manifest
-    # publication overhead per write.
+    # snapshot-table maintenance cycle, which store_keyed_merge (one
+    # MERGE) does not cover. Timing includes manifest publication
+    # overhead per write.
     samples = []
     for _ in range(RUNS):
         wdir = tempfile.mkdtemp(prefix="bench_vstore_")
@@ -266,7 +266,7 @@ def main() -> None:
             )
             t0 = time.perf_counter()
             store.overwrite_keyed(
-                base, "t", "o_orderkey", n_buckets=32, versioned=True
+                base, "t", "o_orderkey", n_buckets=32
             )
             for k in range(3):
                 changes = base.filter(
@@ -312,7 +312,7 @@ def main() -> None:
                 "o_orderkey", "o_totalprice", "o_orderstatus"
             )
             store.overwrite_keyed(
-                base, "t", "o_orderkey", n_buckets=32, versioned=True
+                base, "t", "o_orderkey", n_buckets=32
             )
             store.set_constraints("t", {"price_pos": "o_totalprice > 0"})
 
@@ -414,7 +414,7 @@ def main() -> None:
             "o_orderkey", "o_totalprice", "o_orderstatus"
         )
         store.overwrite_keyed(
-            base, "t", "o_orderkey", n_buckets=32, versioned=True
+            base, "t", "o_orderkey", n_buckets=32
         )
         sync_rollup(store, "t", "r", ["o_orderstatus"], "o_totalprice")
         for k in range(3):
@@ -455,7 +455,7 @@ def main() -> None:
             "o_orderkey", "o_custkey", "o_totalprice"
         )
         store.overwrite_keyed(
-            base, "t", "o_orderkey", n_buckets=32, versioned=True
+            base, "t", "o_orderkey", n_buckets=32
         )
         store.build_bloom_index("t", "o_custkey", m_bits=1 << 17)
         kept, total_files = store.bloom_kept_files("t", "o_custkey", 42)

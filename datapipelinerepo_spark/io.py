@@ -671,43 +671,13 @@ class TableStore:
         with open(p) as f:
             return json.load(f).get("key_types")
 
-    def _meta_schema_df(self, name: str) -> DataFrame | None:
-        """Empty frame with the schema recorded in the keyed meta
-        (written by overwrite_keyed, refreshed on schema-evolving
-        upserts), or None if none was recorded OR the directory lacks a
-        committed-write marker. The read-side fallback for a keyed
-        table whose every row was deleted: the directory then holds no
-        parquet files to infer from, but the table still EXISTS and
-        must read as empty (ADVICE-r6 class, surfaced by delete_where
-        emptying an unversioned table).
-
-        The `_SUCCESS` gate is load-bearing (code-review r7): a
-        parquet-less directory is ALSO what a crashed overwrite leaves
-        behind (static truncation ran, no task committed). Every
-        legitimate emptying path ends in a committed Spark write job
-        (marker present); the crash leaves no marker — without the
-        gate, the crash would read as silently empty and the next
-        upsert would rebuild the table from just its own batch (silent
-        data loss where the pre-fallback code failed loudly)."""
-        if not os.path.isfile(os.path.join(self._dir(name), "_SUCCESS")):
-            return None
-        p = self._meta_path(name)
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            s = json.load(f).get("schema")
-        if s is None:
-            return None
-        from pyspark.sql.types import StructType
-
-        return self.spark.createDataFrame([], StructType.fromJson(json.loads(s)))
-
     def _widened_schema_json(self, name: str, schema) -> str:
         """The stored meta schema widened by ``schema``'s new fields
         (stored order first). Refreshes after evolving writes must only
         ever WIDEN: a batch narrower than the table (legal for appends
-        and bucket-sliced merges) must not shrink the column set the
-        emptied-table fallback serves (code-review r7)."""
+        and bucket-sliced merges) must not shrink the column set that
+        constraint enforcement judges incoming batches against
+        (code-review r7)."""
         from pyspark.sql.types import StructType
 
         p = self._meta_path(name)
@@ -761,10 +731,10 @@ class TableStore:
             return
         with open(p) as f:
             meta = json.load(f)
-        if "keyed_on" in meta or meta.get("versioned"):
+        if "keyed_on" in meta or "version" in meta:
             for k in (
-                "keyed_on", "key_buckets", "key_types", "versioned",
-                "version", "incarnation",
+                "keyed_on", "key_buckets", "key_types", "version",
+                "incarnation",
             ):
                 meta.pop(k, None)
             with open(p, "w") as f:
@@ -779,7 +749,7 @@ class TableStore:
         the data files first and the manifests only afterwards, so a
         crash in between left every manifest pointing at deleted files
         — reads raised path-not-found until another overwrite). Order:
-        un-mark `versioned` in meta first (readers immediately stop
+        drop the meta `version` pointer first (readers immediately stop
         resolving manifests and fall back to the still-intact
         directory), then drop the manifest files. Either crash window
         leaves a readable table; the in-progress overwrite window
@@ -789,9 +759,8 @@ class TableStore:
         if os.path.isfile(p):
             with open(p) as f:
                 meta = json.load(f)
-            if meta.get("versioned") or "version" in meta:
-                meta.pop("versioned", None)
-                meta.pop("version", None)
+            if "version" in meta:
+                meta.pop("version")
                 with open(p, "w") as f:
                     json.dump(meta, f)
         shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
@@ -831,23 +800,21 @@ class TableStore:
         is the intended layout at any scale."""
         return df.repartition(n_buckets, F.col("_kb"))
 
-    # -- snapshot manifests (versioned keyed tables) -----------------------
+    # -- snapshot manifests (every keyed table) -----------------------------
     #
-    # The one Delta property the plain-parquet keyed path lacked was
-    # read-side snapshot isolation: _upsert_keyed's dynamic partition
-    # overwrite DELETES the replaced files, so a reader that planned its
-    # scan before an upsert could collect a half-merged table (VERDICT
-    # r5 item 5). `overwrite_keyed(..., versioned=True)` fixes this with
-    # a manifest generalizing the _meta sidecar: every write appends NEW
-    # part-files (never deleting live ones) and atomically publishes a
-    # manifest listing the files of the new snapshot. Readers resolve a
-    # manifest once at plan time, so any in-flight plan keeps a
-    # consistent version; `read(name, version=N)` pins one explicitly;
-    # `vacuum` reclaims files no retained manifest references. Write
-    # order (data files → manifest rename → meta pointer) makes every
-    # crash window heal: orphan data files are invisible until a
-    # manifest names them, and an unpointed manifest is re-discovered by
-    # max-version scan (crash-window tests in test_io).
+    # A keyed table is its manifest log, as in Delta Lake: a rewrite
+    # that DELETED the replaced files would let a reader that planned
+    # its scan before an upsert collect a half-merged table (VERDICT r5
+    # item 5). Instead every keyed write appends NEW part-files (never
+    # deleting live ones) and atomically publishes a manifest listing
+    # the files of the new snapshot. Readers resolve a manifest once at
+    # plan time, so any in-flight plan keeps a consistent version;
+    # `read(name, version=N)` pins one explicitly; `vacuum` reclaims
+    # files no retained manifest references. Write order (data files →
+    # manifest rename → meta pointer) makes every crash window heal:
+    # orphan data files are invisible until a manifest names them, and
+    # an unpointed manifest is re-discovered by max-version scan
+    # (crash-window tests in test_io).
     #
     # Object-store mapping (S3/GCS have no hard links or atomic rename):
     # the commit primitive here is "create manifest vN exclusively"
@@ -863,11 +830,15 @@ class TableStore:
         return manifest_path(self.root, name, version)
 
     def is_versioned(self, name: str) -> bool:
+        """Does the table resolve reads through snapshot manifests?
+        True for every keyed table: the meta ``version`` pointer is
+        stamped by overwrite_keyed and by every publish, and removed
+        only when a plain overwrite retires the history."""
         p = self._meta_path(name)
         if not os.path.isfile(p):
             return False
         with open(p) as f:
-            return bool(json.load(f).get("versioned"))
+            return "version" in json.load(f)
 
     def versions(self, name: str) -> list[int]:
         return list_versions(self.root, name)
@@ -1146,8 +1117,8 @@ class TableStore:
             version_expect_ident=version_expect_ident,
             txn_assert=txn_assert,
         )
-        # the meta schema tracks evolution (widen-only) so the
-        # fully-emptied-table fallback serves the CURRENT column set
+        # the meta schema tracks evolution (widen-only) so constraint
+        # enforcement widens narrow batches to the CURRENT column set
         # (code-review r7); the manifest keeps the snapshot-exact one
         extra = {}
         if schema_json is not None:
@@ -1156,7 +1127,7 @@ class TableStore:
             extra["schema"] = self._widened_schema_json(
                 name, StructType.fromJson(json.loads(schema_json))
             )
-        self._touch_meta(name, versioned=True, version=v, **extra)
+        self._touch_meta(name, version=v, **extra)
         return v
 
     # -- manifest-carried file statistics (data skipping) ------------------
@@ -3473,7 +3444,7 @@ class TableStore:
     def _maybe_auto_compact(self, name: str, op: str | None) -> None:
         """Write-path auto-compaction: runs after an INCREMENTAL write
         published (never after compaction itself — that would recurse —
-        and never on unversioned tables). The decision reads only the
+        and never on plain tables). The decision reads only the
         just-published manifest's per-bucket file counts; when nothing
         exceeds the threshold, compact() returns without touching
         data. The compaction publishes its own version, so the
@@ -3944,7 +3915,7 @@ class TableStore:
             # overwrite-reset/heal window — report what exists
             # instead of crashing on max([]) (code-review r12)
             out.update({"version": None, "n_versions": 0})
-            # unversioned tables carry their S4 mod-time in meta, not
+            # plain tables carry their S4 mod-time in meta, not
             # manifests — surface it so describe_detail is the one
             # catalog verb pipeline gates need (VERDICT r12 item 7).
             # Re-read rather than reuse the props-block local: that
@@ -4045,17 +4016,14 @@ class TableStore:
             except Exception as ex:
                 meta_issue = f"unreadable meta file ({ex})"
         vs = self.versions(name)
-        if meta_issue is None and not (
-            (meta or {}).get("versioned") or vs
-        ):
-            # a CLEARLY unversioned keyed table has no manifests, so
-            # EVERY live file would read as a reclaimable orphan — a
-            # dangerously wrong report (code-review r8 wave 5). A
-            # table with manifests (or an unreadable meta) still
-            # audits.
+        if meta_issue is None and not ("version" in (meta or {}) or vs):
+            # a plain table has no manifests, so EVERY live file would
+            # read as a reclaimable orphan — a dangerously wrong report
+            # (code-review r8 wave 5). A table with manifests (or an
+            # unreadable meta) still audits.
             raise ValueError(
-                f"{name}: fsck audits versioned tables "
-                "(overwrite_keyed(..., versioned=True))"
+                f"{name}: fsck audits versioned tables — plain tables "
+                "have no manifests; write a keyed table (overwrite_keyed)"
             )
         report: dict = {
             "broken_versions": {},
@@ -4201,8 +4169,7 @@ class TableStore:
         if not vs:
             raise ValueError(
                 f"{name}: no manifest history — timestamp time travel "
-                "needs a versioned table (overwrite_keyed(..., "
-                "versioned=True))"
+                "needs a versioned keyed table (overwrite_keyed)"
             )
         best = None
         for v in vs:  # ascending: the last qualifying version wins
@@ -4750,9 +4717,8 @@ class TableStore:
             version = self.version_as_of(name, as_of_ts)
         if where is not None and not self.is_versioned(name):
             raise ValueError(
-                f"{name}: where= planning needs a versioned table "
-                "(overwrite_keyed(..., versioned=True)); filter an "
-                "ordinary read instead"
+                f"{name}: where= planning needs a keyed table "
+                "(overwrite_keyed); filter an ordinary read instead"
             )
         if self.is_versioned(name):
             v = self.latest_version(name) if version is None else version
@@ -4789,18 +4755,16 @@ class TableStore:
             ).drop("_kb")
         if version is not None:
             raise ValueError(
-                f"{name} is not versioned (overwrite_keyed(..., versioned=True))"
+                f"{name} has no snapshot history — version= needs a "
+                "keyed table (overwrite_keyed)"
             )
-        self._heal_swaps(name)  # finish any interrupted bucket swap (r15)
-        if self.keyed_spec(name) is not None and not self._dir_has_parquet(name):
-            fallback = self._meta_schema_df(name)
-            if fallback is not None:
-                return fallback.drop("_kb")  # fully-emptied keyed table
         df = self.spark.read.option(
             "mergeSchema", str(merge_schema).lower()
         ).parquet(self._dir(name))
         if self.keyed_spec(name) is not None:
-            df = df.drop("_kb")  # internal bucket column stays internal
+            # _retire_versioned's crash window: the keyed directory
+            # serves reads until the plain overwrite lands
+            df = df.drop("_kb")
         return df
 
     def max_value(self, name: str, col: str):
@@ -4809,7 +4773,7 @@ class TableStore:
         stats answer first (``stats_scalar`` — zero Spark jobs, exact
         or refuse; r13), so the freshness gates every orchestration
         loop runs stop costing a scan; any refusal (string column,
-        pre-extension manifest, unversioned table) falls back to the
+        pre-extension manifest, plain table) falls back to the
         real aggregate — the only sanctioned driver-side collect."""
         try:
             return self.stats_scalar(name, "max", col)
@@ -4849,31 +4813,21 @@ class TableStore:
             keys, n = spec
             df = self._to_physical(df, self._colmap_doc(name))
             df = df.withColumn("_kb", self._kb_expr(name, keys, n))
-            if self.is_versioned(name):
-                base_v, base_ident = self._pin_base(name)
+            base_v, base_ident = self._pin_base(name)
 
-                def _rederive():
-                    # appends never remove files: against whatever
-                    # version a concurrent writer just published,
-                    # 'kept' is simply ALL of its files — no
-                    # re-merge, the staged rows are base-independent
-                    nv, nident = self._pin_base(name)
-                    return self._manifest_files(name, nv), nv, nident
+            def _rederive():
+                # appends never remove files: against whatever version
+                # a concurrent writer just published, 'kept' is simply
+                # ALL of its files — no re-merge, the staged rows are
+                # base-independent
+                nv, nident = self._pin_base(name)
+                return self._manifest_files(name, nv), nv, nident
 
-                self._append_and_publish(
-                    df, name, None, self._manifest_files(name, base_v),
-                    op="append", version_expect=base_v,
-                    version_expect_ident=base_ident,
-                    rederive_kept=_rederive,
-                )
-                return
-            self._cluster_kb(df, n).write.mode("append").partitionBy(
-                "_kb"
-            ).parquet(self._dir(name))
-            # evolving appends widen the stored schema the
-            # emptied-table fallback serves (code-review r7)
-            self._touch_meta(
-                name, schema=self._widened_schema_json(name, df.schema)
+            self._append_and_publish(
+                df, name, None, self._manifest_files(name, base_v),
+                op="append", version_expect=base_v,
+                version_expect_ident=base_ident,
+                rederive_kept=_rederive,
             )
             return
         df.write.mode("append").parquet(self._dir(name))
@@ -4967,24 +4921,30 @@ class TableStore:
         name: str,
         key: str | list[str],
         n_buckets: int = 64,
-        versioned: bool = False,
+        versioned: bool = True,
         txn: tuple[str, int] | None = None,
     ) -> None:
         """Write a table hash-bucket-partitioned by its merge key: rows
         land in parquet partitions _kb=pmod(xxhash64(key), n_buckets).
         Subsequent ``upsert`` calls on the same key then rewrite ONLY
-        the buckets containing matched keys (partition pruning + the
-        journaled bucket swap, r15) — the Delta/Iceberg MERGE cost
-        profile on plain parquet, instead of the whole-table rewrite
-        the unkeyed fallback pays. Size n_buckets so one bucket ≈ a few
-        files at the table's target size (the same knob as lakehouse
-        file sizing); the bucket column never surfaces on read.
+        the buckets containing matched keys (partition pruning) — the
+        Delta/Iceberg MERGE cost profile on plain parquet, instead of
+        the whole-table rewrite the unkeyed fallback pays. Size
+        n_buckets so one bucket ≈ a few files at the table's target
+        size (the same knob as lakehouse file sizing); the bucket
+        column never surfaces on read.
 
-        ``versioned=True`` additionally publishes a snapshot manifest
-        per write (see the manifest section above): subsequent upserts
-        append files instead of deleting, readers get snapshot
-        isolation and ``read(name, version=N)`` time travel, and
-        ``vacuum`` reclaims unreferenced files."""
+        Every write publishes a snapshot manifest (see the manifest
+        section above): upserts append files instead of deleting,
+        readers get snapshot isolation and ``read(name, version=N)``
+        time travel, and ``vacuum`` reclaims unreferenced files.
+        ``versioned`` is accepted for old callers and must be True —
+        there is no unversioned keyed table."""
+        if not versioned:
+            raise ValueError(
+                f"{name}: every keyed table is versioned; the "
+                "versioned flag must be True or omitted"
+            )
         keys = [key] if isinstance(key, str) else list(key)
         if int(n_buckets) < 1:
             # pmod(x, 0) is NULL: every row would land in the Hive
@@ -5014,18 +4974,16 @@ class TableStore:
         # not let an already-applied streaming batch (same app_id, old
         # txn_version) silently re-apply — the same reasoning restore()
         # documents, and Delta's behavior (txnAppId watermarks survive
-        # overwrites). Only meaningful when the NEW table is versioned;
-        # an unversioned reseed has no manifest to carry anything.
+        # overwrites).
         carried_txn: dict = {}
-        if versioned:
-            prev_v = self.latest_version(name)
-            if prev_v is not None:
-                try:
-                    carried_txn = dict(
-                        self._manifest_doc(name, prev_v).get("txn", {})
-                    )
-                except FileNotFoundError:
-                    pass
+        prev_v = self.latest_version(name)
+        if prev_v is not None:
+            try:
+                carried_txn = dict(
+                    self._manifest_doc(name, prev_v).get("txn", {})
+                )
+            except FileNotFoundError:
+                pass
         shutil.rmtree(self._manifest_dir(name), ignore_errors=True)
         # stale sidecars must not carry across the reset (ADVICE r12:
         # a surviving index hashes under the OLD incarnation's dtype —
@@ -5047,17 +5005,13 @@ class TableStore:
             .option("partitionOverwriteMode", "static")
             .parquet(self._dir(name))
         )
-        v = (
-            self._write_manifest_file(
-                name,
-                self._data_files(name),
-                schema_json=stamped.schema.json(),
-                txn=txn,
-                op="overwrite",
-                seed_txn=carried_txn,
-            )
-            if versioned
-            else 0
+        v = self._write_manifest_file(
+            name,
+            self._data_files(name),
+            schema_json=stamped.schema.json(),
+            txn=txn,
+            op="overwrite",
+            seed_txn=carried_txn,
         )
         import uuid
 
@@ -5066,7 +5020,6 @@ class TableStore:
             keyed_on=keys,
             key_buckets=n_buckets,
             key_types=key_types,
-            versioned=versioned,
             version=v,
             # fresh per reseed: downstream incremental consumers
             # (sync_rollup) key their watermarks on the incarnation so
@@ -5074,131 +5027,9 @@ class TableStore:
             # detected as a NEW table, not a stale/garbage feed source
             # (code-review r8 wave 3)
             incarnation=uuid.uuid4().hex,
-            # read-side fallback for a later fully-emptied table (see
-            # _meta_schema_df); stamped WITH _kb so bucket-path readers
-            # degrade the same way
+            # the column set constraint enforcement widens batches to
             schema=stamped.schema.json(),
         )
-
-    # -- unversioned stage-and-swap commit (r15) ---------------------------
-    #
-    # The unversioned keyed rewrite protocol: the merged bucket
-    # contents land in a private staging dir, then a JOURNAL file
-    # (._swap-<token>.json in the table dir, invisible to Spark's file
-    # index) records every (staged file → final name) move and every
-    # old file to delete BEFORE any mutation happens. Adds run before
-    # deletes, so the only mid-crash states are (a) journal + staged
-    # files → roll forward, (b) journal + fully-moved adds → finish
-    # deletes, (c) journal with neither staged nor moved adds (the
-    # writer's cleanup ran after a failed move) → roll back the moved
-    # adds and keep the old files. _heal_swaps runs at the head of the
-    # unversioned read/write verbs; an interrupted swap therefore
-    # never loses a bucket — unlike the dynamic-overwrite committer
-    # this replaces, whose commit deletes a partition dir before
-    # renaming the staged one in.
-
-    def _commit_swap(
-        self, name: str, stage: str, replace_buckets=None
-    ) -> None:
-        """``replace_buckets``: bucket ids whose old files must go even
-        when the staged write produced NO rows for them (the
-        overwrite_buckets contract — a bucket fully emptied by deletes
-        is pruned from disk); the staged buckets are always replaced."""
-        import uuid
-
-        base = self._dir(name)
-        token = uuid.uuid4().hex[:12]
-        moves: list[list[str]] = []
-        for d in sorted(os.listdir(stage)):
-            if not d.startswith("_kb="):
-                continue
-            for f in sorted(os.listdir(os.path.join(stage, d))):
-                if f.endswith(".parquet"):
-                    moves.append([f"{d}/{f}", f"{d}/{token}-{f}"])
-        replaced = {m[1].split("/", 1)[0] for m in moves} | {
-            f"_kb={b}" for b in (replace_buckets or [])
-        }
-        dels: list[str] = []
-        for d in sorted(replaced):
-            p = os.path.join(base, d)
-            if os.path.isdir(p):
-                dels += [
-                    f"{d}/{f}"
-                    for f in sorted(os.listdir(p))
-                    if f.endswith(".parquet")
-                ]
-        os.makedirs(base, exist_ok=True)
-        jpath = os.path.join(base, f"._swap-{token}.json")
-        tmp = jpath + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"stage": stage, "moves": moves, "dels": dels}, fh)
-        os.replace(tmp, jpath)
-        self._replay_swap(name, jpath)
-
-    def _replay_swap(self, name: str, jpath: str) -> None:
-        base = self._dir(name)
-        try:
-            with open(jpath) as fh:
-                j = json.load(fh)
-        except (OSError, ValueError):
-            # half-written journal (crash before the atomic replace
-            # never leaves this; a vanished file means a racer healed)
-            return
-        stage = j["stage"]
-        # roll forward only if every add is still completable —
-        # otherwise the staging dir was cleaned up after a failed
-        # write/move and finishing the deletes would lose buckets
-        forward = all(
-            os.path.isfile(os.path.join(base, dst))
-            or os.path.isfile(os.path.join(stage, src))
-            for src, dst in j["moves"]
-        )
-        def _rm_with_crc(p: str) -> None:
-            if os.path.isfile(p):
-                os.remove(p)
-            d_, f_ = os.path.split(p)
-            crc = os.path.join(d_, f".{f_}.crc")
-            if os.path.isfile(crc):
-                os.remove(crc)  # Hadoop LocalFS checksum sidecar
-
-        if forward:
-            for src, dst in j["moves"]:
-                d = os.path.join(base, dst)
-                if not os.path.isfile(d):
-                    os.makedirs(os.path.dirname(d), exist_ok=True)
-                    _fs.replace(os.path.join(stage, src), d)
-            for rel in j["dels"]:
-                _rm_with_crc(os.path.join(base, rel))
-        else:
-            for _src, dst in j["moves"]:
-                _rm_with_crc(os.path.join(base, dst))
-        # parity with the dynamic-overwrite era: a bucket dir fully
-        # emptied by the swap is removed (idempotent, unjournaled — an
-        # empty dir is harmless to every reader either way); leftover
-        # checksum sidecars of files deleted long ago count as empty
-        for d in sorted({rel.split("/", 1)[0] for rel in j["dels"]}):
-            p = os.path.join(base, d)
-            try:
-                if os.path.isdir(p):
-                    entries = os.listdir(p)
-                    if all(
-                        e.startswith(".") and e.endswith(".crc")
-                        for e in entries
-                    ):
-                        for e in entries:
-                            os.remove(os.path.join(p, e))
-                        os.rmdir(p)
-            except OSError:
-                pass
-        os.remove(jpath)
-
-    def _heal_swaps(self, name: str) -> None:
-        base = self._dir(name)
-        if not os.path.isdir(base):
-            return
-        for e in sorted(os.listdir(base)):
-            if e.startswith("._swap-") and e.endswith(".json"):
-                self._replay_swap(name, os.path.join(base, e))
 
     def _upsert_keyed(
         self,
@@ -5214,12 +5045,12 @@ class TableStore:
         rewrite exactly those buckets. Untouched buckets' files are
         never read or rewritten.
 
-        Unversioned tables stage the merged bucket contents and swap
-        the affected buckets' files in under a roll-forward journal
-        (r15 — see _commit_swap); versioned tables instead APPEND the
-        merged bucket contents as new part-files and publish a new
-        manifest (prior version's untouched-bucket files + the new
-        files), so every prior snapshot's files survive until vacuum."""
+        The merged bucket contents APPEND as new part-files and a new
+        manifest publishes (prior version's untouched-bucket files +
+        the new files), so every prior snapshot's files survive until
+        vacuum. Nothing the merge reads is overwritten, so the merged
+        frame writes in a single pass with no defensive
+        materialization."""
         incoming = self._to_physical(incoming, self._colmap_doc(name))
         stamped = incoming.withColumn(
             "_kb", self._kb_expr(name, keys, n_buckets)
@@ -5239,99 +5070,40 @@ class TableStore:
         # same single-evaluation property with no extra job.
         stamped = stamped.localCheckpoint(eager=False)
         affected = [r[0] for r in stamped.select("_kb").distinct().collect()]
-        versioned = self.is_versioned(name)
-        if not versioned:
-            self._heal_swaps(name)  # finish interrupted swaps (r15)
+        aff = set(affected)
 
-        def _merge_with(raw: DataFrame) -> DataFrame:
-            slice_ = raw.filter(F.col("_kb").isin(affected))
+        def _attempt() -> None:
+            # the merge input must be the CURRENT SNAPSHOT's files,
+            # not the directory (which also holds older versions'
+            # files); the publish CASes on base_v, so a concurrent
+            # commit between this read and the publish re-runs the
+            # merge against the new version instead of silently
+            # dropping the racer's files (ADVICE r9)
+            base_v, base_ident = self._pin_base(name)
+            slice_ = self._read_manifest_df(name, base_v).filter(
+                F.col("_kb").isin(affected)
+            )
             inc_keys, cond = _key_match(keys, stamped, "_ik_")
             survivors = slice_.join(inc_keys, cond, how="left_anti")
             merged = survivors.unionByName(stamped, allowMissingColumns=True)
-            # both paths write the merged frame in a SINGLE pass: the
-            # versioned path appends + publishes a manifest (r14), the
-            # unversioned path stages to a private dir and swaps files
-            # under a roll-forward journal (r15) — neither overwrites
-            # what it reads, so no defensive materialization is needed
-            return merged
-
-        if versioned:
-            def _attempt() -> None:
-                # the merge input must be the CURRENT SNAPSHOT's files,
-                # not the directory (which also holds older versions'
-                # files); the publish CASes on base_v, so a concurrent
-                # commit between this read and the publish re-runs the
-                # merge against the new version instead of silently
-                # dropping the racer's files (ADVICE r9)
-                base_v, base_ident = self._pin_base(name)
-                merged = _merge_with(self._read_manifest_df(name, base_v))
-                aff = set(affected)
-                kept = [
-                    f
-                    for f in self._manifest_files(name, base_v)
-                    if self._bucket_of(f) not in aff
-                ]
-                self._append_and_publish(
-                    merged,
-                    name,
-                    affected,
-                    kept,
-                    txn=txn,
-                    op="upsert",
-                    check_replay=check_replay,
-                    version_expect=base_v,
-                    version_expect_ident=base_ident,
-                )
-
-            self._retry_base_conflicts(_attempt)
-            return
-        raw = (
-            self._meta_schema_df(name)  # fully-emptied table: revive
-            if not self._dir_has_parquet(name)
-            else None
-        )
-        if raw is None:
-            raw = self.spark.read.option("mergeSchema", "true").parquet(
-                self._dir(name)
+            kept = [
+                f
+                for f in self._manifest_files(name, base_v)
+                if self._bucket_of(f) not in aff
+            ]
+            self._append_and_publish(
+                merged,
+                name,
+                affected,
+                kept,
+                txn=txn,
+                op="upsert",
+                check_replay=check_replay,
+                version_expect=base_v,
+                version_expect_ident=base_ident,
             )
-        merged = _merge_with(raw)
-        # r15 (optimization, guide §5): stage-and-swap instead of
-        # localCheckpoint + dynamic partition overwrite. The old form
-        # materialized the WHOLE merged result in executor memory
-        # (a full extra evaluation locally; cache pressure proportional
-        # to the affected buckets at scale) purely to sever the
-        # read-from-overwritten-path lineage. Writing the merged frame
-        # to a private staging dir reads the live files and writes new
-        # ones — one pass, no cache — and the journaled file swap
-        # (_commit_swap) replaces the affected buckets' files with a
-        # roll-forward heal that is strictly SAFER than the dynamic
-        # committer's crash window (which could drop a bucket between
-        # its delete and rename): the journal lands before any
-        # mutation, adds precede deletes, and readers/writers heal
-        # pending journals before listing the directory.
-        import uuid
 
-        swap_stage = os.path.join(
-            self.root, f".stagein-{name}-{uuid.uuid4().hex[:12]}"
-        )
-        try:
-            (
-                self._cluster_kb(merged, int(n_buckets))
-                .write.mode("append")
-                .partitionBy("_kb")
-                .parquet(swap_stage)
-            )
-            self._commit_swap(name, swap_stage)
-        finally:
-            shutil.rmtree(swap_stage, ignore_errors=True)
-        self._touch_meta(
-            name,
-            keyed_on=keys,
-            key_buckets=n_buckets,
-            # refresh: an evolving upsert widens the stored schema the
-            # emptied-table fallback serves (code-review r7)
-            schema=self._widened_schema_json(name, merged.schema),
-        )
+        self._retry_base_conflicts(_attempt)
 
     @staticmethod
     def _route_buckets(rows, types, n_buckets: int) -> list[int] | None:
@@ -5375,23 +5147,16 @@ class TableStore:
     def read_buckets(self, name: str, buckets: list[int]) -> DataFrame:
         """Partition-pruned read of just the listed buckets (without
         the internal _kb column)."""
-        v = self.latest_version(name) if self.is_versioned(name) else None
+        v = self.latest_version(name)
         doc = None
         if v is not None:
             doc = self._manifest_doc(name, v)
             raw = self._read_manifest_df(name, v, doc=doc)
         else:
-            # unversioned, or versioned with missing history (crash
-            # inside overwrite_keyed's reset window — the directory is
-            # the consistent snapshot iff the write committed; see read())
-            if self.is_versioned(name):
-                self._assert_committed_dir(name)
-            else:
-                self._heal_swaps(name)  # finish interrupted swaps (r15)
-            if not self._dir_has_parquet(name):
-                fallback = self._meta_schema_df(name)
-                if fallback is not None:
-                    return fallback.drop("_kb")  # fully-emptied table
+            # missing history (crash inside overwrite_keyed's reset
+            # window): the directory is the consistent snapshot iff the
+            # write committed; see read()
+            self._assert_committed_dir(name)
             raw = self.spark.read.option("mergeSchema", "true").parquet(
                 self._dir(name)
             )
@@ -5405,9 +5170,9 @@ class TableStore:
         buckets those keys hash to — the serving-path read that makes
         a keyed table answer "give me these ids" by scanning
         |keys' buckets| / n_buckets of the table instead of all of it.
-        On a versioned table the lookup is snapshot-consistent (the
-        bucket read resolves one manifest). Equality is null-safe,
-        mirroring upsert's key matching.
+        The lookup is snapshot-consistent (the bucket read resolves
+        one manifest). Equality is null-safe, mirroring upsert's key
+        matching.
 
         At 100 TB with n_buckets sized to a few files per bucket, a
         k-key lookup touches ≤ k bucket directories' footers — the
@@ -5460,25 +5225,20 @@ class TableStore:
         rows_within_buckets: bool = False,
     ) -> None:
         """Replace exactly the listed buckets with ``df``'s rows
-        (stamped by the table's key spec). Buckets in ``buckets`` that
-        end up with NO rows are pruned from disk. Lazy frames are fine
-        on BOTH paths (r15): versioned tables append + publish,
-        unversioned tables stage to a private dir and swap files under
-        a roll-forward journal — neither overwrites the files ``df``
-        reads, so callers no longer materialize survivor frames.
-
-        On a versioned table nothing is deleted: the new bucket
-        contents append as new part-files and the published manifest
-        simply stops referencing the replaced (or emptied) buckets'
-        old files — deletes are logical until vacuum.
+        (stamped by the table's key spec). Nothing is deleted: the new
+        bucket contents append as new part-files and the published
+        manifest simply stops referencing the replaced (or emptied)
+        buckets' old files — deletes are logical until vacuum. Lazy
+        frames are fine: the append never overwrites the files ``df``
+        reads, so callers need not materialize survivor frames.
 
         ``rows_within_buckets=True`` (internal verbs) asserts the
         caller PROVED every row of ``df`` hashes into ``buckets``
         (delete/update survivors keep their keys; merge_when derived
         ``buckets`` from every source row including inserts) — the
-        versioned widening collect below is then skipped, saving a
-        full evaluation of ``df``'s lineage (r14). Public callers
-        leave it False and keep the safety net.
+        widening collect below is then skipped, saving a full
+        evaluation of ``df``'s lineage (r14). Public callers leave it
+        False and keep the safety net.
 
         This is the low-level maintenance primitive (delete_where and
         CDC feed SURVIVOR frames through it), so CHECK constraints are
@@ -5487,74 +5247,40 @@ class TableStore:
         keys, n = self.keyed_spec(name)
         df = self._to_physical(df, self._colmap_doc(name))
         stamped = df.withColumn("_kb", self._kb_expr(name, keys, n))
-        if self.is_versioned(name):
-            # ``version_expect``: the version the CALLER's frame was
-            # derived from (delete_where/merge_when survivors) — the
-            # publish CASes on it so a concurrent commit surfaces as
-            # BaseVersionConflict for the caller's retry instead of a
-            # lost update (ADVICE r9). Default: pinned here, which
-            # still guards the kept-list derivation below.
-            if version_expect is None:
-                base_v, base_ident = self._pin_base(name)
-            else:
-                base_v, base_ident = int(version_expect), version_expect_ident
-            # rows hashing OUTSIDE the listed buckets must still land
-            # in the manifest — without widening, their files would be
-            # appended but unreferenced (an invisible write) while the
-            # stale old rows of their buckets stayed live
-            # (code-review r6). Widening mirrors the unversioned path,
-            # where dynamic overwrite replaces every bucket that
-            # receives data. Callers that PROVED containment skip the
-            # widening evaluation (rows_within_buckets above).
-            if rows_within_buckets:
-                eff = sorted(set(buckets))
-            else:
-                nonempty = {
-                    r[0]
-                    for r in stamped.select("_kb").distinct().collect()
-                }
-                eff = sorted(set(buckets) | nonempty)
-            eff_set = set(eff)
-            kept = [
-                f
-                for f in self._manifest_files(name, base_v)
-                if self._bucket_of(f) not in eff_set
-            ]
-            self._append_and_publish(
-                stamped, name, eff, kept, op=op, txn=txn,
-                check_replay=check_replay, txn_expect=txn_expect,
-                version_expect=base_v, version_expect_ident=base_ident,
-                txn_assert=txn_assert,
-            )
-            return
-        # r15: journaled stage-and-swap (see _commit_swap) instead of
-        # dynamic partition overwrite + a SECOND evaluation of the
-        # frame (the nonempty probe that pruned fully-emptied buckets).
-        # The swap's delete set is the staged buckets ∪ the LISTED
-        # buckets, so rows hashing outside ``buckets`` still replace
-        # their bucket (the widening dynamic overwrite provided) and a
-        # listed bucket that received no rows is emptied from disk —
-        # both without re-running the frame's lineage; callers no
-        # longer need to materialize frames derived from this table's
-        # own files (the staging write never overwrites what it reads).
-        import uuid
-
-        self._heal_swaps(name)
-        stage = os.path.join(
-            self.root, f".stagein-{name}-{uuid.uuid4().hex[:12]}"
-        )
-        try:
-            (
-                self._cluster_kb(stamped, n)
-                .write.mode("append")
-                .partitionBy("_kb")
-                .parquet(stage)
-            )
-            self._commit_swap(name, stage, replace_buckets=buckets)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        self._touch_meta(
-            name, schema=self._widened_schema_json(name, stamped.schema)
+        # ``version_expect``: the version the CALLER's frame was
+        # derived from (delete_where/merge_when survivors) — the
+        # publish CASes on it so a concurrent commit surfaces as
+        # BaseVersionConflict for the caller's retry instead of a lost
+        # update (ADVICE r9). Default: pinned here, which still guards
+        # the kept-list derivation below.
+        if version_expect is None:
+            base_v, base_ident = self._pin_base(name)
+        else:
+            base_v, base_ident = int(version_expect), version_expect_ident
+        # rows hashing OUTSIDE the listed buckets must still land in
+        # the manifest — without widening, their files would be
+        # appended but unreferenced (an invisible write) while the
+        # stale old rows of their buckets stayed live (code-review r6).
+        # Callers that PROVED containment skip the widening evaluation
+        # (rows_within_buckets above).
+        if rows_within_buckets:
+            eff = sorted(set(buckets))
+        else:
+            nonempty = {
+                r[0] for r in stamped.select("_kb").distinct().collect()
+            }
+            eff = sorted(set(buckets) | nonempty)
+        eff_set = set(eff)
+        kept = [
+            f
+            for f in self._manifest_files(name, base_v)
+            if self._bucket_of(f) not in eff_set
+        ]
+        self._append_and_publish(
+            stamped, name, eff, kept, op=op, txn=txn,
+            check_replay=check_replay, txn_expect=txn_expect,
+            version_expect=base_v, version_expect_ident=base_ident,
+            txn_assert=txn_assert,
         )
 
     def _table_initialized(self, name: str) -> bool:
@@ -5810,7 +5536,7 @@ class TableStore:
         if spec is None or not self.is_versioned(name):
             raise ValueError(
                 f"{name}: upsert_txn needs a versioned keyed table "
-                "(overwrite_keyed(..., versioned=True))"
+                "(overwrite_keyed)"
             )
         if list(spec[0]) != keys:
             raise ValueError(
@@ -5924,7 +5650,6 @@ class TableStore:
                             name,
                             keys,
                             n_buckets=n_buckets,
-                            versioned=True,
                             txn=(app_id, int(txn_version)),
                         )
                     return True
@@ -6003,7 +5728,6 @@ class TableStore:
             keyed_on=keys,
             key_buckets=int(n_buckets),
             key_types=key_types,
-            versioned=True,
             version=1,
             # fresh lifetime: downstream incremental consumers must
             # re-seed rather than trust cursors from before the loss
@@ -6051,15 +5775,15 @@ class TableStore:
 
         Cost profile: identical to the keyed upsert — the source's
         keys hash to their buckets (bounded collect), ONLY those
-        buckets are read and rewritten (logically, on versioned
-        tables), untouched buckets never move. CHECK constraints judge
+        buckets are read and rewritten (logically — a new manifest),
+        untouched buckets never move. CHECK constraints judge
         exactly the rows the merge LANDS (updated + inserted — kept
         survivors are not re-judged). Returns the affected bucket ids.
         Reference MERGE surface: Delta DeltaTable.merge /
         whenMatched{Update,Delete}/whenNotMatchedInsert.
 
         ``txn``/``check_replay`` give the merge the same transactional
-        watermark upsert_txn has (versioned tables only): the
+        watermark upsert_txn has: the
         (app_id, version) records atomically with the manifest commit,
         and ``check_replay=True`` raises TxnAlreadyApplied when the
         watermark already covers it — sync_rollup rides this for
@@ -6069,16 +5793,6 @@ class TableStore:
         if spec is None:
             raise ValueError(
                 f"{name}: merge_when needs a keyed table (overwrite_keyed)"
-            )
-        if txn is not None and not self.is_versioned(name):
-            # the unversioned write path has no manifest to carry the
-            # watermark: silently applying would hand the caller a txn
-            # guarantee that does not exist (code-review r8 wave 3) —
-            # refuse loudly, like upsert_txn
-            raise ValueError(
-                f"{name}: merge_when(txn=...) needs a VERSIONED keyed "
-                "table (overwrite_keyed(..., versioned=True)) — "
-                "unversioned tables cannot record the watermark"
             )
         if list(spec[0]) != keys:
             raise ValueError(
@@ -6115,9 +5829,7 @@ class TableStore:
         source_meta_cols,
         txn_assert=None,
     ) -> list[int]:
-        v0, v0_ident = (
-            self._pin_base(name) if self.is_versioned(name) else (None, None)
-        )
+        v0, v0_ident = self._pin_base(name)
         buckets = self.keyed_buckets(name, source)
         target = self.read_buckets(name, buckets)
         # ``source_meta_cols`` are per-row MERGE DIRECTIVES (e.g. an
@@ -6261,11 +5973,10 @@ class TableStore:
             # lazy checkpoint; the staging write reads the cache)
             proj = proj.localCheckpoint(eager=False)
         merged = proj.drop("_act")
-        # r15: no defensive materialization on either path — versioned
-        # appends + publishes; unversioned stages + swaps (neither
-        # overwrites the files the join reads); the lazy checkpoint
-        # above exists purely so the landed check and the write share
-        # one evaluation of the join
+        # no defensive materialization: the write appends + publishes
+        # and never overwrites the files the join reads; the lazy
+        # checkpoint above exists purely so the landed check and the
+        # write share one evaluation of the join
         if check_needed:
             # constraints judge exactly what this merge WRITES anew —
             # updated and inserted rows; surviving history is not
@@ -6288,8 +5999,8 @@ class TableStore:
         fixed data, more buckets only add per-file overhead; at
         growing data, n_buckets should track 'a few row groups per
         bucket'). A full rewrite by necessity (every row re-hashes),
-        executed as a reseed overwrite_keyed: versioned tables carry
-        their txn watermark map forward (replayed streaming batches
+        executed as a reseed overwrite_keyed: the table carries its
+        txn watermark map forward (replayed streaming batches
         stay skipped), but version numbering restarts and a NEW
         incarnation is minted — change-feed cursors and sync_rollup
         watermarks correctly treat the rebucketed table as a fresh
@@ -6324,7 +6035,6 @@ class TableStore:
             name,
             list(keys),
             n_buckets=int(n_buckets),
-            versioned=self.is_versioned(name),
         )
         shutil.rmtree(stage, ignore_errors=True)
 
@@ -6382,12 +6092,11 @@ class TableStore:
         rows' keys — a ≤ n_buckets bounded collect); untouched buckets'
         files are never read for the rewrite nor rewritten — the
         Delta/Iceberg DELETE cost profile on plain parquet, same as
-        _upsert_keyed's. Versioned tables delete LOGICALLY: the new
-        manifest stops referencing the affected buckets' old files and
-        prior snapshots stay pinnable until vacuum (overwrite_buckets
-        handles both, including fully-emptied buckets). Unkeyed tables
-        fall back to filter + full overwrite, the same trade as
-        unkeyed upsert. Returns the affected bucket ids ([] if nothing
+        _upsert_keyed's. The delete is LOGICAL: the new manifest stops
+        referencing the affected buckets' old files (fully-emptied
+        buckets included) and prior snapshots stay pinnable until
+        vacuum. Unkeyed tables fall back to filter + full overwrite,
+        the same trade as unkeyed upsert. Returns the affected bucket ids ([] if nothing
         matched; [-1] for the unkeyed full rewrite).
 
         ``where=`` (r13, versioned keyed tables; mutually exclusive
@@ -6414,11 +6123,7 @@ class TableStore:
             self._overwrite_raw(survivors, name)
             return [-1]
         def _attempt() -> list[int]:
-            v0, v0_ident = (
-                self._pin_base(name)
-                if self.is_versioned(name)
-                else (None, None)
-            )
+            v0, v0_ident = self._pin_base(name)
             if where is not None:
                 # pruned find phase: _read_planned applies the exact
                 # predicate on the skipped scan, pinned at v0 so the
@@ -6432,9 +6137,8 @@ class TableStore:
             if not affected:
                 return []
             survivors = self.read_buckets(name, affected).filter(keep)
-            # r15: no materialization on either path — versioned
-            # appends + publishes (r14); unversioned stages + swaps,
-            # neither overwrites the files the survivors frame reads
+            # no materialization: the write appends + publishes and
+            # never overwrites the files the survivors frame reads
             self.overwrite_buckets(
                 survivors, name, affected, op="delete",
                 version_expect=v0, version_expect_ident=v0_ident,
@@ -6463,8 +6167,8 @@ class TableStore:
         matched rows rewrite; ``where=`` (planner grammar, versioned
         keyed tables) lets the FIND phase ride stats/bloom/bucket file
         skipping, so updating a rare key on an indexed column reads
-        ~1% of files to locate its buckets. Versioned tables publish
-        the rewrite as a new snapshot (time travel, CDF and the OCC
+        ~1% of files to locate its buckets. Keyed tables publish the
+        rewrite as a new snapshot (time travel, CDF and the OCC
         retry all compose as with delete). Declared constraints are
         enforced on the post-update MATCHED rows only — judged on the
         write's real effect, while untouched legacy rows can't wedge
@@ -6536,11 +6240,7 @@ class TableStore:
             return [-1]
 
         def _attempt() -> list[int]:
-            v0, v0_ident = (
-                self._pin_base(name)
-                if self.is_versioned(name)
-                else (None, None)
-            )
+            v0, v0_ident = self._pin_base(name)
             if where is not None:
                 matches = self._read_planned(
                     name, where, v0, self._manifest_doc(name, v0)
@@ -6555,8 +6255,8 @@ class TableStore:
                 name, _apply(bucket_rows.filter(condition), always=True)
             )
             updated = _apply(bucket_rows)
-            # r15: no materialization on either path — versioned
-            # appends + publishes (r14); unversioned stages + swaps
+            # no materialization: the write appends + publishes and
+            # never overwrites the files bucket_rows reads
             self.overwrite_buckets(
                 updated, name, affected, op="update",
                 version_expect=v0, version_expect_ident=v0_ident,

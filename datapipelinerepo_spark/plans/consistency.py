@@ -189,8 +189,8 @@ def resolve_group_versions(
             )
         if not store.is_versioned(name):
             raise ValueError(
-                f"read_group: {name} is not a versioned table "
-                "(overwrite_keyed(..., versioned=True))"
+                f"read_group: {name} is not a versioned table — "
+                "write it as a keyed table (overwrite_keyed)"
             )
         loading.append(name)
         try:

@@ -123,7 +123,6 @@ def seed_rollup(
     distinct_col: str | None = None,
     distinct_sketch_col: str | None = None,
     n_buckets: int = 16,
-    versioned: bool = False,
     txn: tuple | None = None,
 ) -> None:
     """Materialize the initial grouped aggregate of a snapshot as a
@@ -157,13 +156,6 @@ def seed_rollup(
       (union drops DataSketches' HIP estimator, so the estimate is
       approximate even at small cardinalities — never oracle-hash it)."""
     _check_distinct_args(distinct_of, distinct_col, distinct_sketch_col)
-    if txn is not None and not versioned:
-        raise ValueError(
-            "seed_rollup: txn= needs versioned=True — an unversioned "
-            "rollup has no manifest to record the watermark, and "
-            "silently dropping it would void the caller's replay "
-            "protection (code-review r8 wave 3)"
-        )
     aggs = [
         F.count(F.lit(1)).alias(count_col),
         # NULL measure values contribute 0 — and a group with ONLY
@@ -196,8 +188,7 @@ def seed_rollup(
             F.col(sum_col).cast("double") / F.col(count_col),
         )
     store.overwrite_keyed(
-        agg, table, group_cols, n_buckets=n_buckets, versioned=versioned,
-        txn=txn,
+        agg, table, group_cols, n_buckets=n_buckets, txn=txn
     )
     # record the maintained-column spec so a later apply/sync that
     # names DIFFERENT columns fails loudly instead of silently leaving
@@ -680,7 +671,6 @@ def sync_rollup(
                 distinct_col=distinct_col,
                 distinct_sketch_col=distinct_sketch_col,
                 n_buckets=n_buckets,
-                versioned=True,
                 txn=(app_id, current),
             )
             return current

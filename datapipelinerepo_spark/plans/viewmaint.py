@@ -140,14 +140,14 @@ def sync_join_view(
     """
     fkeys = [fact_key] if isinstance(fact_key, str) else list(fact_key)
     # fail FAST on the documented contract (code-review r10 wave 5:
-    # an unversioned base silently seeded, then the first incremental
+    # a plain base silently seeded, then the first incremental
     # sync errored one call too late with a stray healed manifest)
     for tbl, role in ((fact_table, "fact"), (dim_table, "dim")):
         if not store.is_versioned(tbl) or store.keyed_spec(tbl) is None:
             raise ValueError(
                 f"{tbl}: sync_join_view needs a VERSIONED KEYED {role} "
-                "table (overwrite_keyed(..., versioned=True)) — the "
-                "change feeds it maintains from require manifests"
+                "table (overwrite_keyed) — the change feeds it "
+                "maintains from require manifests"
             )
     # the dim must be keyed ON the join column: the store's key-level
     # dedup on every upsert is what guarantees the 1:N shape — a dim
@@ -484,7 +484,7 @@ def _seed_join_view(
         )
         store.overwrite_keyed(
             seeded, view_table, fkeys, n_buckets=n_buckets,
-            versioned=True, txn=(fact_app, cur_f),
+            txn=(fact_app, cur_f),
         )
         # the dim watermark rides a metadata-only publish: a crash
         # between the two stamps re-enters the seed path, which

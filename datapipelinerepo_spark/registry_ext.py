@@ -4188,9 +4188,9 @@ def store_keyed_merge(spark, sf_dir):
     (doubled prices for some even keys + unseen odd-key inserts)
     upserts into it, and the read-back table must equal the oracle's
     plain replace-by-key merge. Exercises end to end: bucket stamping,
-    partition-pruned slice read, null-safe anti-join, dynamic
-    partition overwrite of ONLY the affected buckets, and the hidden
-    _kb column staying hidden — the pipeline_idempotent_reload
+    partition-pruned slice read, null-safe anti-join, a manifest
+    publish that replaces ONLY the affected buckets' files, and the
+    hidden _kb column staying hidden — the pipeline_idempotent_reload
     pattern applied to keyed merges."""
     base, inc = keyed_merge_frames(spark, sf_dir)
     store, finish = _ephemeral_store(spark, "keyedmerge_")
@@ -4368,7 +4368,7 @@ def store_versioned_snapshot(spark, sf_dir):
         .select("o_orderkey", (F.col("o_totalprice") * 2).alias("o_totalprice"))
     )
     store, finish = _ephemeral_store(spark, "versioned_")
-    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16, versioned=True)
+    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16)
     store.upsert(inc, "t", "o_orderkey")
     v1 = store.read("t", version=1).select(
         F.lit(1).alias("version"), "o_orderkey", "o_totalprice"
@@ -4398,8 +4398,8 @@ def store_delete_where(spark, sf_dir):
     DELETE semantics: NULL-predicate rows are KEPT). Exercises the
     bucket-pruned rewrite end to end: matched rows hash to their
     buckets (bounded collect), ONLY those buckets' survivors rewrite
-    (fully-emptied buckets are pruned from disk), untouched buckets'
-    files are never read for the rewrite — the Delta/Iceberg DELETE
+    (fully-emptied buckets drop out of the manifest), untouched
+    buckets' files are never read for the rewrite — the Delta/Iceberg DELETE
     cost profile on plain parquet."""
     base = (
         t(spark, sf_dir, "orders")
@@ -4782,7 +4782,7 @@ def store_restore_rollback(spark, sf_dir):
     )
     corrupt = base.withColumn("o_totalprice", -F.col("o_totalprice"))
     store, finish = _ephemeral_store(spark, "restore_")
-    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16, versioned=True)
+    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16)
     store.upsert(corrupt, "t", "o_orderkey")
     store.restore("t", 1)
     trail = [h["op"] for h in store.history("t")]
@@ -4880,7 +4880,7 @@ def store_time_travel_ts(spark, sf_dir):
         .select("o_orderkey", (F.col("o_totalprice") + 7).alias("o_totalprice"))
     )
     store, finish = _ephemeral_store(spark, "asofts_")
-    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16, versioned=True)
+    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16)
     _time.sleep(0.005)
     store.upsert(inc, "t", "o_orderkey")
     _time.sleep(0.005)
@@ -4939,7 +4939,7 @@ def store_schema_evolution(spark, sf_dir):
         )
     )
     store, finish = _ephemeral_store(spark, "evolve_")
-    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16, versioned=True)
+    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16)
     store.upsert(inc, "t", "o_orderkey")
     _require(
         set(store.read("t", version=1).columns)
@@ -5007,7 +5007,7 @@ def store_cdf_changes(spark, sf_dir):
         .select("o_orderkey", (F.col("o_totalprice") * 2).alias("o_totalprice"))
     )
     store, finish = _ephemeral_store(spark, "cdf_")
-    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16, versioned=True)
+    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16)
     store.upsert(inc, "t", "o_orderkey")
     store.delete_where("t", F.col("o_totalprice") > 300000)
     return finish(
@@ -5076,7 +5076,7 @@ def store_cdf_stream_drain(spark, sf_dir):
         .select("o_orderkey", (F.col("o_totalprice") * 2).alias("o_totalprice"))
     )
     store, finish = _ephemeral_store(spark, "cdfstream_")
-    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16, versioned=True)
+    store.overwrite_keyed(base, "t", "o_orderkey", n_buckets=16)
     store.upsert(inc, "t", "o_orderkey")
     store.delete_where("t", F.col("o_totalprice") > 300000)
     import shutil
@@ -5262,7 +5262,7 @@ def _ivm_base_only(spark, sf_dir, prefix):
     base, inc = _ivm_frames(spark, sf_dir)
     store, finish = _ephemeral_store(spark, prefix)
     store.overwrite_keyed(
-        base, "t", "o_orderkey", n_buckets=16, versioned=True
+        base, "t", "o_orderkey", n_buckets=16
     )
     store.upsert(inc, "t", "o_orderkey")  # v2
     store.delete_where("t", F.col("o_totalprice") > 300000)  # v3
@@ -5278,7 +5278,7 @@ def _ivm_rollup_lifecycle(spark, sf_dir, prefix):
     base, inc = _ivm_frames(spark, sf_dir)
     store, finish = _ephemeral_store(spark, prefix)
     store.overwrite_keyed(
-        base, "t", "o_orderkey", n_buckets=16, versioned=True
+        base, "t", "o_orderkey", n_buckets=16
     )
     seed_rollup(
         store, store.read("t", version=1), "r", ["o_orderstatus"],
@@ -5307,7 +5307,7 @@ def _ivm_minmax_lifecycle(spark, sf_dir, prefix):
     store, finish = _ephemeral_store(spark, prefix)
     kw = dict(min_col="min_val", max_col="max_val", avg_col="avg_val")
     store.overwrite_keyed(
-        base, "t", "o_orderkey", n_buckets=16, versioned=True
+        base, "t", "o_orderkey", n_buckets=16
     )
     sync_rollup(store, "t", "r", ["o_orderstatus"], "o_totalprice", **kw)
     store.upsert(inc, "t", "o_orderkey")  # v2: insert-only min/max path
@@ -5518,7 +5518,7 @@ def store_column_mapping(spark, sf_dir):
     )
     store, finish = _ephemeral_store(spark, "colmap_")
     store.overwrite_keyed(
-        base, "t", "o_orderkey", n_buckets=16, versioned=True
+        base, "t", "o_orderkey", n_buckets=16
     )
     v1_files = set(store._manifest_files("t", 1))
     v_ren = store.rename_column("t", "o_totalprice", "amount")
@@ -5714,7 +5714,6 @@ def store_stats_skipping(spark, sf_dir):
         "t",
         "o_orderkey",
         n_buckets=8,
-        versioned=True,
     )
     for y in range(1996, 2002):  # the testdata spans 1995–2001
         store.append(orders.filter(F.year("o_orderdate") == y), "t")
@@ -5896,7 +5895,7 @@ def store_auto_compact(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "autoc_")
     store.overwrite_keyed(
         orders.filter(F.col("o_orderkey") % 2 == 0),
-        "t", "o_orderkey", n_buckets=8, versioned=True,
+        "t", "o_orderkey", n_buckets=8,
     )
     store.set_table_properties("t", auto_compact_files_per_bucket=2)
     store.append(orders.filter(F.col("o_orderkey") % 4 == 1), "t")
@@ -6099,7 +6098,7 @@ def store_incremental_distinct(spark, sf_dir):
         distinct_sketch_col="custkeys_hll",
     )
     store.overwrite_keyed(
-        base, "t", "o_orderkey", n_buckets=16, versioned=True
+        base, "t", "o_orderkey", n_buckets=16
     )
     sync_rollup(store, "t", "r", ["o_orderstatus"], "o_totalprice", **kw)
     store.upsert(inc, "t", "o_orderkey")  # v2: updates+inserts → re-sketch
@@ -6191,7 +6190,7 @@ def store_incremental_distinct_sketch(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "ivmsk_")
     kw = dict(distinct_of="o_custkey", distinct_sketch_col="custkeys_hll")
     store.overwrite_keyed(
-        base, "t", "o_orderkey", n_buckets=16, versioned=True
+        base, "t", "o_orderkey", n_buckets=16
     )
     sync_rollup(store, "t", "r", ["o_orderstatus"], "o_totalprice", **kw)
     store.upsert(ins, "t", "o_orderkey")  # v2: PURE inserts → hll_union
@@ -6339,7 +6338,7 @@ def store_read_group(spark, sf_dir):
     base, inc = _ivm_frames(spark, sf_dir)
     store, finish = _ephemeral_store(spark, "rg_")
     store.overwrite_keyed(
-        base, "t", "o_orderkey", n_buckets=16, versioned=True
+        base, "t", "o_orderkey", n_buckets=16
     )
     sync_rollup(store, "t", "r", ["o_orderstatus"], "o_totalprice")
     store.upsert(inc, "t", "o_orderkey")  # v2 — deliberately UNSYNCED
@@ -6453,7 +6452,7 @@ def store_read_group_asof(spark, sf_dir):
     )
     store, finish = _ephemeral_store(spark, "rga_")
     store.overwrite_keyed(
-        base, "t", "o_orderkey", n_buckets=16, versioned=True
+        base, "t", "o_orderkey", n_buckets=16
     )
     sync_rollup(store, "t", "r", ["o_orderstatus"], "o_totalprice")
     # the consistency point: the instant the first sync published.
@@ -6735,10 +6734,10 @@ def store_stacked_view_group(spark, sf_dir):
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     store, finish = _ephemeral_store(spark, "stk_")
     store.overwrite_keyed(
-        base, "f", "o_orderkey", n_buckets=16, versioned=True
+        base, "f", "o_orderkey", n_buckets=16
     )
     store.overwrite_keyed(
-        cust, "d", "c_custkey", n_buckets=8, versioned=True
+        cust, "d", "c_custkey", n_buckets=8
     )
 
     def sync_view():
@@ -6873,7 +6872,7 @@ def store_streaming_stack(spark, sf_dir):
         os.makedirs(src)
         store = TableStore(spark, os.path.join(d, "store"))
         store.overwrite_keyed(
-            cust, "dim", "c_custkey", n_buckets=8, versioned=True
+            cust, "dim", "c_custkey", n_buckets=8
         )
 
         def drain():
@@ -7023,10 +7022,10 @@ def store_incremental_join(spark, sf_dir):
     )
     store, finish = _ephemeral_store(spark, "ivj_")
     store.overwrite_keyed(
-        fact0, "fact", "o_orderkey", n_buckets=16, versioned=True
+        fact0, "fact", "o_orderkey", n_buckets=16
     )
     store.overwrite_keyed(
-        dim0, "dim", "c_custkey", n_buckets=8, versioned=True
+        dim0, "dim", "c_custkey", n_buckets=8
     )
     args = (store, "fact", "dim", "v", "o_orderkey", "o_custkey",
             "c_custkey")
@@ -7143,7 +7142,7 @@ def store_streaming_join(spark, sf_dir):
         os.makedirs(src)
         store = TableStore(spark, os.path.join(d, "store"))
         store.overwrite_keyed(
-            dim0, "dim", "c_custkey", n_buckets=8, versioned=True
+            dim0, "dim", "c_custkey", n_buckets=8
         )
 
         def stage(df, tag):
@@ -7235,7 +7234,7 @@ def store_incremental_dedup_corpus(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "idc_")
     store.overwrite_keyed(
         docs.filter(F.col("doc_id") % 3 == 1),
-        "corpus", "doc_id", n_buckets=8, versioned=True,
+        "corpus", "doc_id", n_buckets=8,
     )
 
     def ingest(batch):
@@ -7340,7 +7339,7 @@ def store_incremental_lsh_index(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "ili_")
     hist = docs.filter(F.col("doc_id") % 5 != 0)
     store.overwrite_keyed(
-        hist, "corpus", "doc_id", n_buckets=8, versioned=True
+        hist, "corpus", "doc_id", n_buckets=8
     )
     store.overwrite(D.minhash_band_index(hist), "bandidx")
 
@@ -7410,7 +7409,7 @@ def store_bloom_point_read(spark, sf_dir):
     )
     store, finish = _ephemeral_store(spark, "bpr_")
     store.overwrite_keyed(
-        orders, "t", "o_orderkey", n_buckets=16, versioned=True
+        orders, "t", "o_orderkey", n_buckets=16
     )
     store.build_bloom_index("t", "o_custkey", m_bits=1 << 17)
 
@@ -7535,7 +7534,7 @@ def store_incremental_ann_index(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "iai_")
     hist = emb.filter(F.col("vec_id") % 5 != 0)
     store.overwrite_keyed(
-        hist, "corpus", "vec_id", n_buckets=8, versioned=True
+        hist, "corpus", "vec_id", n_buckets=8
     )
     store.overwrite(
         SIM.ann_bucket_index(hist, dim=64, n_bits=1, n_tables=1),
@@ -7615,7 +7614,7 @@ def store_read_planned(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "rpl_")
     store.overwrite_keyed(
         orders.filter(F.year("o_orderdate") <= 1995),
-        "t", "o_orderkey", n_buckets=8, versioned=True,
+        "t", "o_orderkey", n_buckets=8,
     )
     for y in range(1996, 2002):  # testdata spans 1995-2001
         store.append(orders.filter(F.year("o_orderdate") == y), "t")
@@ -7708,7 +7707,7 @@ def store_bloom_conjunctive_read(spark, sf_dir):
     # satisfiable at every sf. Sizing only — the exact filter is
     # always re-applied, output unchanged.
     store.overwrite_keyed(
-        li, "t", "l_orderkey", n_buckets=64, versioned=True
+        li, "t", "l_orderkey", n_buckets=64
     )
     store.build_bloom_index("t", "l_partkey", m_bits=1 << 20)
     store.build_bloom_index("t", "l_extendedprice", m_bits=1 << 20)
@@ -7765,7 +7764,7 @@ def store_bloom_inlist_read(spark, sf_dir):
     # the probe legitimately keeps all of them (caught by the r13
     # sf0.1 bench sweep)
     store.overwrite_keyed(
-        orders, "t", "o_orderkey", n_buckets=64, versioned=True
+        orders, "t", "o_orderkey", n_buckets=64
     )
     store.build_bloom_index("t", "o_custkey", m_bits=1 << 17)
     vals = [7, 21, 41, 100, 1000000007]
@@ -7831,7 +7830,7 @@ def store_group_point_read(spark, sf_dir):
     )
     store, finish = _ephemeral_store(spark, "gpr_")
     store.overwrite_keyed(
-        orders, "t", "o_orderkey", n_buckets=16, versioned=True
+        orders, "t", "o_orderkey", n_buckets=16
     )
     sync_rollup(store, "t", "r", ["o_custkey"], "o_totalprice")
     store.build_bloom_index("t", "o_custkey", m_bits=1 << 17)
@@ -7927,7 +7926,7 @@ def store_read_planned_disjunction(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "rpd_")
     store.overwrite_keyed(
         orders.filter(F.year("o_orderdate") <= 1995),
-        "t", "o_orderkey", n_buckets=8, versioned=True,
+        "t", "o_orderkey", n_buckets=8,
     )
     for y in range(1996, 2002):
         store.append(orders.filter(F.year("o_orderdate") == y), "t")
@@ -8023,7 +8022,7 @@ def store_read_planned_prefix(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "rpp_")
     store.overwrite_keyed(
         part.filter(F.col("p_name") < "h"),
-        "t", "p_partkey", n_buckets=4, versioned=True,
+        "t", "p_partkey", n_buckets=4,
     )
     store.append(
         part.filter((F.col("p_name") >= "h") & (F.col("p_name") < "o")),
@@ -8094,7 +8093,7 @@ def store_read_planned_nulls(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "rpn_")
     store.overwrite_keyed(
         orders.filter(F.col("o_orderstatus") != "F"),
-        "t", "o_orderkey", n_buckets=4, versioned=True,
+        "t", "o_orderkey", n_buckets=4,
     )
     store.append(orders.filter(F.col("o_orderstatus") == "F"), "t")
 
@@ -8177,7 +8176,7 @@ def store_bloom_element_read(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "bel_")
     store.overwrite_keyed(
         docs.filter(F.col("doc_id") < 250),
-        "t", "doc_id", n_buckets=4, versioned=True,
+        "t", "doc_id", n_buckets=4,
     )
     store.append(docs.filter(F.col("doc_id") >= 250), "t")
     store.build_bloom_index("t", "toks", m_bits=1 << 14, elements=True)
@@ -8248,7 +8247,7 @@ def store_stats_scalar_agg(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "ssa_")
     store.overwrite_keyed(
         orders.filter(F.col("o_orderkey") % 2 == 0),
-        "t", "o_orderkey", n_buckets=4, versioned=True,
+        "t", "o_orderkey", n_buckets=4,
     )
     store.append(orders.filter(F.col("o_orderkey") % 2 == 1), "t")
 
@@ -8316,7 +8315,7 @@ def store_update_where(spark, sf_dir):
     )
     store, finish = _ephemeral_store(spark, "upw_")
     store.overwrite_keyed(
-        orders, "t", "o_orderkey", n_buckets=8, versioned=True
+        orders, "t", "o_orderkey", n_buckets=8
     )
     v1 = store.latest_version("t")
     affected = store.update_where(
@@ -8394,7 +8393,7 @@ def store_count_planned(spark, sf_dir):
     store, finish = _ephemeral_store(spark, "cwp_")
     store.overwrite_keyed(
         orders.filter(F.year("o_orderdate") <= 1995),
-        "t", "o_orderkey", n_buckets=4, versioned=True,
+        "t", "o_orderkey", n_buckets=4,
     )
     for y in range(1996, 2002):
         store.append(orders.filter(F.year("o_orderdate") == y), "t")

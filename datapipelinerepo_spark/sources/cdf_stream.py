@@ -156,10 +156,10 @@ class TableChangesStreamReader(DataSourceStreamReader):
         self.table = options["table"]
         self.start_opt = options.get("starting_version")
         meta = read_meta(self.root, self.table)
-        if not meta.get("versioned") or "keyed_on" not in meta:
+        if "version" not in meta or "keyed_on" not in meta:
             raise ValueError(
                 f"{self.table}: the CDF stream needs a versioned keyed "
-                "table (overwrite_keyed(..., versioned=True))"
+                "table (overwrite_keyed)"
             )
         self.keys = list(meta["keyed_on"])
         self.incarnation = meta.get("incarnation")

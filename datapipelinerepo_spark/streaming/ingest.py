@@ -494,9 +494,9 @@ def cdc_ingest_stream(
         if exactly_once_app is not None:
             raise ValueError(
                 f"{base_table}: exactly-once CDC needs the table "
-                "pre-created with overwrite_keyed(..., versioned=True) "
-                f"on key {key!r} — the unkeyed fallback cannot carry "
-                "the watermark"
+                "pre-created as a keyed table (overwrite_keyed) on key "
+                f"{key!r} — the unkeyed fallback cannot carry the "
+                "watermark"
             )
         batch = batch.localCheckpoint(eager=True)
         # _table_initialized, not exists(): a meta-only shell from
@@ -558,10 +558,9 @@ def cdc_apply_txn(
             # than a loud contract failure (code-review r7 wave 3: the
             # caller believes they bought transactional exactly-once)
             raise ValueError(
-                f"{base_table}: exactly-once CDC needs a VERSIONED "
-                "keyed table (overwrite_keyed(..., versioned=True)) — "
-                "unversioned tables have no manifest to carry the "
-                "(app, batch) watermark"
+                f"{base_table}: exactly-once CDC needs a keyed table "
+                "(overwrite_keyed) — plain tables have no manifest to "
+                "carry the (app, batch) watermark"
             )
         last = store.last_txn(base_table, app_id)
         if last is not None and last >= int(batch_id):
@@ -580,11 +579,7 @@ def cdc_apply_txn(
         # silently replaced by a merge over the prior snapshot —
         # cdc_apply was the one bucket-rewriting verb the r10 OCC
         # scheme initially missed
-        v0, v0_ident = (
-            store._pin_base(base_table)
-            if store.is_versioned(base_table)
-            else (None, None)
-        )
+        v0, v0_ident = store._pin_base(base_table)
         # bucket-partitioned maintenance: merge the batch into ONLY
         # the buckets its keys hash to — the per-batch cost is
         # |batch's buckets|, not the table (the keyed-upsert fast path
@@ -811,7 +806,7 @@ def maintained_join_view_stream(
     ):
         raise ValueError(
             f"{dim_table}: maintained_join_view_stream needs a "
-            f"pre-existing dim table, versioned and keyed on "
+            f"pre-existing keyed dim table (overwrite_keyed) on "
             f"[{dim_join_col!r}] — a stream cannot create the "
             "dimension it enriches from"
         )
@@ -890,7 +885,7 @@ def maintained_stack_stream(
     ):
         raise ValueError(
             f"{dim_table}: maintained_stack_stream needs a "
-            f"pre-existing dim table, versioned and keyed on "
+            f"pre-existing keyed dim table (overwrite_keyed) on "
             f"[{dim_join_col!r}] — a stream cannot create the "
             "dimension it enriches from"
         )

@@ -259,17 +259,43 @@ def test_keyed_upsert_null_key_and_schema_evolution(spark, tmp_path):
 
 
 def test_keyed_table_append_and_overwrite_routing(spark, tmp_path):
-    """append() into a keyed table stamps rows into buckets (an
+    """Every keyed table is versioned: with no flag, overwrite_keyed
+    publishes v1, so after an upsert the table serves time travel, the
+    change feed and exactly-once watermarks, and versioned=False is
+    refused. append() into a keyed table stamps rows into buckets (an
     unstamped root write would be invisible to the partitioned read —
     reproduced silent data loss); a plain overwrite() clears the keyed
     marker so the next upsert takes the fallback instead of crashing
     on a missing _kb column."""
+    import pytest as _pytest
+
     store = TableStore(spark, str(tmp_path))
     base = spark.createDataFrame([(i, f"v{i}") for i in range(20)], ["id", "v"])
+    with _pytest.raises(ValueError, match="versioned"):
+        store.overwrite_keyed(base, "t", "id", n_buckets=4, versioned=False)
+    assert not store.exists("t")
     store.overwrite_keyed(base, "t", "id", n_buckets=4)
+    store.upsert(
+        spark.createDataFrame([(3, "UPD"), (50, "ins")], ["id", "v"]), "t", "id"
+    )
+    v1 = {r["id"]: r["v"] for r in store.read("t", version=1).collect()}
+    assert v1 == {i: f"v{i}" for i in range(20)}
+    changes = {
+        (r["id"], r["v"], r["_change_type"])
+        for r in store.table_changes("t", 1).collect()
+    }
+    assert changes == {
+        (3, "v3", "update_preimage"),
+        (3, "UPD", "update_postimage"),
+        (50, "ins", "insert"),
+    }
+    batch = spark.createDataFrame([(60, "txn")], ["id", "v"])
+    assert store.upsert_txn(batch, "t", "id", "app", 0) is True
+    assert store.last_txn("t", "app") == 0
+    assert store.upsert_txn(batch, "t", "id", "app", 0) is False  # replay
     store.append(spark.createDataFrame([(99, "new")], ["id", "v"]), "t")
     got = {r["id"]: r["v"] for r in store.read("t").collect()}
-    assert got[99] == "new" and len(got) == 21
+    assert got[99] == "new" and got[3] == "UPD" and len(got) == 23
 
     plain = spark.createDataFrame([(1, "only")], ["id", "v"])
     store.overwrite(plain, "t")
@@ -452,36 +478,6 @@ def test_versioned_publish_crash_window_heals(spark, tmp_path, monkeypatch):
     assert store.versions("t") == [1, 2, 3]
     got = {r["id"]: r["price"] for r in store.read("t").collect()}
     assert got[3] == 333.0 and got[4] == 444.0
-
-
-def test_unversioned_upsert_crash_before_meta_heals(spark, tmp_path, monkeypatch):
-    """VERDICT r5 item 6: kill the write between _upsert_keyed's bucket
-    overwrite and _touch_meta. The data is already merged on disk, the
-    keyed marker is stale-but-valid, and re-running the upsert is
-    idempotent — the table heals on the next operation."""
-    store = TableStore(spark, str(tmp_path))
-    base = spark.createDataFrame(
-        [(i, float(i)) for i in range(100)], ["id", "price"]
-    )
-    store.overwrite_keyed(base, "t", "id", n_buckets=8)
-    orig = store._touch_meta
-
-    def boom(name, **extra):
-        raise OSError("injected: died after bucket overwrite")
-
-    monkeypatch.setattr(store, "_touch_meta", boom)
-    import pytest as _pytest
-
-    inc = spark.createDataFrame([(3, 333.0), (900, 900.0)], ["id", "price"])
-    with _pytest.raises(OSError):
-        store.upsert(inc, "t", "id")
-    monkeypatch.setattr(store, "_touch_meta", orig)
-    # data landed; marker survived; retry is a value-level no-op
-    assert store.keyed_spec("t") == (["id"], 8)
-    got = {r["id"]: r["price"] for r in store.read("t").collect()}
-    assert got[3] == 333.0 and got[900] == 900.0 and len(got) == 101
-    store.upsert(inc, "t", "id")
-    assert {r["id"]: r["price"] for r in store.read("t").collect()} == got
 
 
 def test_overwrite_keyed_crash_before_marker_heals(spark, tmp_path, monkeypatch):
@@ -922,13 +918,27 @@ def test_delete_where_keyed_and_versioned(spark, tmp_path):
 
 
 def test_delete_where_empties_bucket_and_unkeyed(spark, tmp_path):
-    """Deleting EVERY row of some buckets prunes them; string
-    predicates work; unkeyed tables fall back to full rewrite."""
+    """Deleting EVERY row of a bucket drops its files from the latest
+    manifest (vacuum then reclaims them); string predicates work;
+    unkeyed tables fall back to full rewrite."""
+    import os
+
     store = TableStore(spark, str(tmp_path))
     base = spark.createDataFrame(
         [(i, float(i)) for i in range(40)], "id long, price double"
     )
     store.overwrite_keyed(base, "t", "id", n_buckets=4)
+    [b] = store.keyed_buckets("t", spark.createDataFrame([(0,)], "id long"))
+    in_b = [r["id"] for r in store.read_buckets("t", [b]).collect()]
+    old = [f for f in store._manifest_files("t", 1) if store._bucket_of(f) == b]
+    assert old
+    assert store.delete_where("t", F.col("id").isin(in_b)) == [b]
+    latest = store._manifest_files("t", store.latest_version("t"))
+    assert not [f for f in latest if store._bucket_of(f) == b]
+    assert store.read("t").count() == 40 - len(in_b)
+    store.vacuum("t", keep_last=1, grace_s=0.0)
+    for rel in old:
+        assert not os.path.exists(os.path.join(store._dir("t"), rel))
     store.delete_where("t", "id >= 0")  # everything
     # a fully-emptied keyed table still reads (empty, stored schema)...
     empty = store.read("t")
@@ -1072,12 +1082,14 @@ def test_write_zordered_narrows_every_dimension(spark, sf_dir, tmp_path):
 
 
 def test_emptied_table_fallback_requires_committed_marker(spark, tmp_path):
-    """Code-review r7: a parquet-less keyed directory is ALSO what a
-    crashed overwrite leaves (static truncation ran, no task
-    committed). The empty-table fallback must gate on the _SUCCESS
-    marker: without it, reads fail LOUDLY and an upsert cannot
-    silently rebuild the table from just its own batch."""
+    """Code-review r7: an emptied keyed table reads empty from its
+    manifest, but a parquet-less directory with NO manifest history is
+    what a crashed overwrite_keyed leaves (history reset, static
+    truncation ran, no task committed). The directory fallback must
+    gate on the _SUCCESS marker: without it, reads fail LOUDLY and an
+    upsert cannot silently rebuild the table from just its own batch."""
     import os
+    import shutil
 
     import pytest as _pytest
 
@@ -1086,13 +1098,18 @@ def test_emptied_table_fallback_requires_committed_marker(spark, tmp_path):
         [(i, float(i)) for i in range(20)], "id long, price double"
     )
     store.overwrite_keyed(base, "t", "id", n_buckets=4)
-    # simulate the crash window: every data file AND the marker gone
+    store.delete_where("t", "id >= 0")
+    empty = store.read("t")
+    assert empty.count() == 0 and empty.columns == ["id", "price"]
+    # simulate the crash window: history reset, every data file AND
+    # the marker gone
+    shutil.rmtree(store._manifest_dir("t"))
     for root, _dirs, files in os.walk(str(tmp_path / "t")):
         for f in files:
             os.remove(os.path.join(root, f))
-    with _pytest.raises(Exception):
+    with _pytest.raises(RuntimeError, match="_SUCCESS"):
         store.read("t").count()
-    with _pytest.raises(Exception):
+    with _pytest.raises(RuntimeError, match="_SUCCESS"):
         store.upsert(
             spark.createDataFrame([(1, 1.0)], "id long, price double"),
             "t",
@@ -1101,10 +1118,10 @@ def test_emptied_table_fallback_requires_committed_marker(spark, tmp_path):
 
 
 def test_emptied_table_schema_tracks_evolution(spark, tmp_path):
-    """Code-review r7: the meta schema the emptied-table fallback
-    serves must WIDEN with evolving upserts (and never narrow from a
-    slim batch), so a later fully-emptied table reads back with every
-    column the table ever had."""
+    """Code-review r7: the schema an emptied keyed table serves must
+    WIDEN with evolving upserts (and never narrow from a slim batch),
+    so a later fully-emptied table reads back with every column the
+    table ever had."""
     store = TableStore(spark, str(tmp_path))
     store.overwrite_keyed(
         spark.createDataFrame([(1, 1.0)], "id long, price double"),
@@ -1692,6 +1709,8 @@ def test_versioned_reseed_overwrite_carries_txn_watermarks(spark, tmp_path):
     retiring history's txn map into its v1 manifest — a replayed
     streaming batch (same app_id, old txn_version) after the reseed
     must still be skipped, like Delta and like restore()."""
+    import pytest as _pytest
+
     store = TableStore(spark, str(tmp_path))
     b0 = spark.createDataFrame(
         [(i, float(i)) for i in range(10)], "id long, price double"
@@ -1705,10 +1724,12 @@ def test_versioned_reseed_overwrite_carries_txn_watermarks(spark, tmp_path):
     # the replayed batch is skipped, not re-applied
     assert store.upsert_txn(b0, "t", "id", "app", 7) is False
     assert {r["id"] for r in store.read("t").collect()} == {1}
-    # an UNVERSIONED reseed drops versioning (and with it the map) —
-    # the documented trade; upsert_txn then refuses loudly
-    store.overwrite_keyed(reseed, "t", "id", n_buckets=4, versioned=False)
+    # a PLAIN overwrite drops versioning (and with it the map) — the
+    # documented trade; upsert_txn then refuses loudly
+    store.overwrite(reseed, "t")
     assert store.last_txn("t", "app") is None
+    with _pytest.raises(ValueError, match="versioned keyed table"):
+        store.upsert_txn(b0, "t", "id", "app", 8)
 
 
 def test_manifest_ts_monotonic_across_clock_skew(spark, tmp_path, monkeypatch):
@@ -2699,9 +2720,9 @@ def test_sync_rollup_wave3_fixes(spark, tmp_path):
     watermarks refuse an overlapping-but-longer concurrent window;
     (2) a base reseed (new incarnation, version numbering restarted)
     makes the next sync RE-SEED instead of silently no-oping or
-    diffing unrelated manifests; (3) merge_when and seed_rollup refuse
-    txn= on unversioned tables instead of silently dropping the
-    watermark."""
+    diffing unrelated manifests; (3) merge_when refuses txn= on a
+    plain table instead of silently dropping the watermark, and
+    seed_rollup's keyed table always records it."""
     from decimal import Decimal
 
     import pytest as _pytest
@@ -2759,15 +2780,16 @@ def test_sync_rollup_wave3_fixes(spark, tmp_path):
     assert sync_rollup(store, "t", "r", ["grp"], "val") == 1
     got = {r["grp"]: (r["n_rows"], r["sum_val"]) for r in store.read("r").collect()}
     assert got == {"Z": (1, Decimal("100.0000"))}
-    # (3) txn on unversioned surfaces refuse loudly
-    store.overwrite_keyed(base, "u", "id", n_buckets=2, versioned=False)
-    with _pytest.raises(ValueError, match="VERSIONED"):
+    # (3) txn on a plain table refuses loudly; a seeded rollup is
+    # keyed, hence versioned, and records the watermark
+    store.overwrite(base, "u")
+    with _pytest.raises(ValueError, match="keyed table"):
         store.merge_when(
             spark.createDataFrame([(1, 1.0, "A")], "id long, val double, grp string"),
             "u", "id", txn=("app", 1),
         )
-    with _pytest.raises(ValueError, match="versioned=True"):
-        seed_rollup(store, base, "u2", ["grp"], "val", txn=("app", 1))
+    seed_rollup(store, base, "u2", ["grp"], "val", txn=("app", 1))
+    assert store.last_txn("u2", "app") == 1
 
 
 def test_read_where_multi_column_and_rebucket(spark, tmp_path):
@@ -2994,12 +3016,11 @@ def test_fsck_hardening_wave5(spark, tmp_path):
     open(store._meta_path("t"), "w").write("{bad")
     rep = store.fsck("t")
     assert any("unreadable meta" in i for i in rep["issues"])
-    # a genuinely unversioned keyed table refuses loudly — every live
+    # a plain table refuses loudly — with no manifests, every live
     # file would otherwise read as reclaimable debt
     store2 = TableStore(spark, str(tmp_path / "u"))
-    store2.overwrite_keyed(
-        spark.createDataFrame([(1, 1.0)], "id long, v double"),
-        "u", "id", n_buckets=2, versioned=False,
+    store2.overwrite(
+        spark.createDataFrame([(1, 1.0)], "id long, v double"), "u"
     )
     with _pytest.raises(ValueError, match="versioned"):
         store2.fsck("u")
@@ -4336,122 +4357,3 @@ def test_null_stats_inert_counter_distinct_key(spark, tmp_path):
     # the min/max key stays untouched by the null-inert path alone
     nulls_only = store.prune_stat_misses.get(("t", "ts", "nulls"))
     assert ("t", "ts") not in store.prune_stat_misses or nulls_only
-
-
-def test_unversioned_swap_crash_recovery(spark, tmp_path):
-    """r15: the unversioned keyed upsert commits via stage-and-swap
-    under a roll-forward journal. Every crash window must heal to a
-    consistent table: (a) journal + staged adds -> roll forward to the
-    merged state; (b) journal + adds moved but deletes pending ->
-    finish deletes (no duplicate keys); (c) journal with the staging
-    dir gone and adds unmoved -> roll back to the pre-upsert state."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    def mk(tag):
-        store = TableStore(spark, str(tmp_path / tag))
-        base = spark.range(40).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-        )
-        store.overwrite_keyed(base, "t", "k", n_buckets=4)
-        inc = spark.range(10, 20).select(
-            F.col("id").alias("k"), F.lit(-1).alias("v")
-        )
-        return store, inc
-
-    def interrupted_swap(store, inc, stop_after):
-        """Run the upsert but interrupt _replay_swap at a chosen point
-        by capturing the journal before replay and re-creating it."""
-        tdir = store._dir("t")
-        stamped = store._to_physical(inc, store._colmap_doc("t")).withColumn(
-            "_kb", store._kb_expr("t", ["k"], 4)
-        )
-        stage = str(tmp_path / "crash_stage")
-        shutil.rmtree(stage, ignore_errors=True)
-        raw = spark.read.option("mergeSchema", "true").parquet(tdir)
-        from datapipelinerepo_spark.io import _key_match
-
-        affected = [r[0] for r in stamped.select("_kb").distinct().collect()]
-        inc_keys, cond = _key_match(["k"], stamped, "_ik_")
-        merged = (
-            raw.filter(F.col("_kb").isin(affected))
-            .join(inc_keys, cond, how="left_anti")
-            .unionByName(stamped)
-            .localCheckpoint()
-        )
-        store._cluster_kb(merged, 4).write.mode("append").partitionBy(
-            "_kb"
-        ).parquet(stage)
-        # build the journal exactly as _commit_swap would, then stop
-        # at the requested point instead of replaying
-        token = "crashtok12345"
-        moves = []
-        for d in sorted(os.listdir(stage)):
-            if d.startswith("_kb="):
-                for f in sorted(os.listdir(os.path.join(stage, d))):
-                    if f.endswith(".parquet"):
-                        moves.append([f"{d}/{f}", f"{d}/{token}-{f}"])
-        dels = []
-        for d in sorted({m[1].split("/", 1)[0] for m in moves}):
-            p = os.path.join(tdir, d)
-            if os.path.isdir(p):
-                dels += [
-                    f"{d}/{f}"
-                    for f in sorted(os.listdir(p))
-                    if f.endswith(".parquet")
-                ]
-        jpath = os.path.join(tdir, f"._swap-{token}.json")
-        with open(jpath, "w") as fh:
-            json.dump({"stage": stage, "moves": moves, "dels": dels}, fh)
-        if stop_after == "journal":
-            return stage
-        for src, dst in moves:  # adds fully moved, deletes pending
-            d = os.path.join(tdir, dst)
-            os.makedirs(os.path.dirname(d), exist_ok=True)
-            os.replace(os.path.join(stage, src), d)
-        if stop_after == "adds":
-            return stage
-        raise AssertionError(stop_after)
-
-    merged_expect = sorted(
-        [(k, -1 if 10 <= k < 20 else k * 10) for k in range(40)]
-    )
-    pre_expect = sorted([(k, k * 10) for k in range(40)])
-
-    # (a) crash right after the journal landed: heal rolls forward
-    store, inc = mk("a")
-    stage = interrupted_swap(store, inc, "journal")
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == merged_expect
-    assert not [
-        e for e in os.listdir(store._dir("t")) if e.startswith("._swap-")
-    ]
-    shutil.rmtree(stage, ignore_errors=True)
-
-    # (b) crash after the adds moved: heal finishes the deletes —
-    # no duplicate keys survive
-    store, inc = mk("b")
-    stage = interrupted_swap(store, inc, "adds")
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == merged_expect
-    shutil.rmtree(stage, ignore_errors=True)
-
-    # (c) journal present but the staging dir is gone and no add
-    # moved (writer cleanup after a failed staging write): heal rolls
-    # back to the pre-upsert table
-    store, inc = mk("c")
-    stage = interrupted_swap(store, inc, "journal")
-    # undo nothing in the table, but delete the stage as the writer's
-    # finally-cleanup would
-    shutil.rmtree(stage)
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == pre_expect
-
-    # and the normal (uninterrupted) path still merges correctly
-    store, inc = mk("d")
-    store.upsert(inc, "t", "k")
-    got = sorted((r["k"], r["v"]) for r in store.read("t").collect())
-    assert got == merged_expect

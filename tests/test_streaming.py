@@ -389,10 +389,11 @@ def test_cdc_ingest_stream(spark, tmp_path):
 
 def test_cdc_ingest_stream_keyed_table(spark, tmp_path):
     """CDC streaming into a bucket-partitioned table: each batch
-    rewrites only the buckets its keys hash to, untouched buckets'
-    files stay bit-identical, a bucket fully emptied by deletes
-    disappears from disk, and the final table equals the full-rewrite
-    path's result."""
+    rewrites only the buckets its keys hash to, untouched buckets keep
+    referencing the same files, a bucket fully emptied by deletes
+    leaves the latest manifest (and its files leave the disk at
+    vacuum), and the final table equals the full-rewrite path's
+    result."""
     import os
 
     from pyspark.sql import functions as F
@@ -408,12 +409,12 @@ def test_cdc_ingest_stream_keyed_table(spark, tmp_path):
     store.overwrite_keyed(base, "dim_current", "k", n_buckets=n_buckets)
 
     def bucket_files():
-        root = tmp_path / "store" / "dim_current"
-        return {
-            d: sorted(os.listdir(root / d))
-            for d in os.listdir(root)
-            if d.startswith("_kb=")
-        }
+        # the LIVE files per bucket: what the latest manifest references
+        out: dict = {}
+        v = store.latest_version("dim_current")
+        for f in store._manifest_files("dim_current", v):
+            out.setdefault(f.split("/", 1)[0], []).append(f)
+        return out
 
     before = bucket_files()
     src = tmp_path / "in"
@@ -454,7 +455,12 @@ def test_cdc_ingest_stream_keyed_table(spark, tmp_path):
     assert len(got) == 64 - len(doomed) + 1
 
     after = bucket_files()
-    assert f"_kb={doomed_bucket}" not in after  # emptied bucket pruned
+    assert f"_kb={doomed_bucket}" not in after  # emptied bucket dropped
+    store.vacuum("dim_current", keep_last=1, grace_s=0.0)
+    doomed_dir = tmp_path / "store" / "dim_current" / f"_kb={doomed_bucket}"
+    assert not doomed_dir.exists() or not [
+        f for f in os.listdir(doomed_dir) if f.endswith(".parquet")
+    ]
     touched = {f"_kb={b}" for b in {bucket_of[upd_key], doomed_bucket}} | {
         f"_kb={r[0]}"
         for r in spark.createDataFrame([(900,)], ["k"])
@@ -712,8 +718,8 @@ def test_cdc_apply_txn_exactly_once(spark, tmp_path):
 def test_cdc_constraints_and_exactly_once_guard(spark, tmp_path):
     """Wave-3 review fixes: CDC batches are constraint-judged on the
     rows they LAND (delete markers exempt), historical violations
-    never wedge the stream, and exactly_once on an unversioned table
-    refuses loudly instead of silently degrading."""
+    never wedge the stream, and exactly_once on a plain table refuses
+    loudly instead of silently degrading."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -750,12 +756,11 @@ def test_cdc_constraints_and_exactly_once_guard(spark, tmp_path):
     # refused batch did not consume the watermark
     assert store.last_txn("dim", "cdc") == 1
 
-    # exactly-once on an UNVERSIONED table: loud refusal
-    store.overwrite_keyed(
-        spark.createDataFrame([(1, 1.0)], "id long, v double"),
-        "u", "id", n_buckets=4,
+    # exactly-once on a PLAIN table: loud refusal
+    store.overwrite(
+        spark.createDataFrame([(1, 1.0)], "id long, v double"), "u"
     )
-    with _pytest.raises(ValueError, match="VERSIONED"):
+    with _pytest.raises(ValueError, match="keyed table"):
         cdc_apply_txn(
             store,
             spark.createDataFrame(

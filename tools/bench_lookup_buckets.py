@@ -48,7 +48,7 @@ def main() -> None:
         try:
             store = TableStore(spark, wdir)
             store.overwrite_keyed(
-                orders, "t", "o_orderkey", n_buckets=nb, versioned=True
+                orders, "t", "o_orderkey", n_buckets=nb
             )
             samples = []
             for _ in range(RUNS):

@@ -48,7 +48,7 @@ def main() -> None:
         try:
             store = TableStore(spark, os.path.join(wdir, "store"))
             store.overwrite_keyed(
-                base, "t", "o_orderkey", n_buckets=32, versioned=True
+                base, "t", "o_orderkey", n_buckets=32
             )
             store.set_constraints("t", {"price_pos": "o_totalprice > 0"})
             batch = base.filter(F.col("o_orderkey") % 100 == 7).withColumn(
